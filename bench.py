@@ -432,13 +432,14 @@ def main() -> None:
     for q in sel_queries:
         params = sel_reader.term_params(
             dict(_Counter(qvm.vector_query_terms(q, qvm.STOPWORDS))))
-        rows = (sel_reader.postings_for(list(params))
-                .select("term", "salt", "blocks").toPandas())
+        shards = [qvm.read_salt_postings(salt, files, list(params))
+                  for task in sel_reader.scan_tasks(list(params))
+                  for salt, files in task]
         for label, prune in (("pruned", True), ("exact", False)):
             qvm._DECODED_CACHE.clear()
             qvm._DECODED_CACHE_POSTINGS = 0
             t0 = time.time()
-            for _salt, pdf in rows.groupby("salt"):
+            for pdf in shards:
                 qvm._score_shard_kernel(
                     params, "bm25", 10, sel_reader.salt_map, prune,
                     sel_reader.avgdl, sel_reader.k1, sel_reader.b,

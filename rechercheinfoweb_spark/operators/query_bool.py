@@ -24,19 +24,18 @@ on the reference query set is the goal:
   its operands so the non-NOT side binds first, and a NOT under OR
   (or at top level) sees an empty bound set → empty result.
 
-Evaluation is document-partitioned, like the ranked path: ONE
-bucket-pruned postings fetch for all query terms, then the whole
-AST evaluates independently inside each ``salt`` shard
-(applyInPandas kernel over numpy id arrays).  This is correct
-because shards are disjoint doc-id ranges and every reference set
-operation distributes over disjoint ranges — including the bound
-NOT, whose ``prec`` operand is itself shard-local.  The shape
-beats join-based set algebra at any scale: postings are already
-co-partitioned by salt, so AND/OR/NOT never shuffle id lists at
-all; the only movement is the final per-shard result union.  (An
-earlier design compiled to semi/anti/union joins — Catalyst-
-correct, but each operator paid a shuffle and the multi-stage
-latency dominated interactive queries.)
+Evaluation is document-partitioned, like the ranked path, and runs
+the same one-job plan (:meth:`IndexReader.scan`): one task reads the
+query terms' postings of its salts with pyarrow, and the whole AST
+evaluates independently inside each ``salt`` shard over numpy id
+arrays.  This is correct because shards are disjoint doc-id ranges and
+every reference set operation distributes over disjoint ranges —
+including the bound NOT, whose ``prec`` operand is itself
+shard-local.  The result is ``orderBy("doc_id")``; with one task that
+sort needs no exchange, so a query is one Spark job with one Python
+task.  Postings are already co-partitioned by salt, so AND/OR/NOT
+never move id lists; join-based set algebra would pay a shuffle per
+operator.
 """
 
 from __future__ import annotations
@@ -44,7 +43,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import codec
 from ..functions.tokenizer import QUERY_TOKEN_RE, bool_query_term
@@ -168,10 +168,10 @@ def _eval_ast_numpy(node, term_ids, prec: np.ndarray) -> np.ndarray:
 
 
 def _eval_shard_kernel(ast, use_stem: bool = True, dead_bc=None):
-    """applyInPandas kernel over one salt shard's posting rows:
-    decode each term's ids (first varint section only — no
-    statistics decode), evaluate the AST on the shard's disjoint
-    doc-id range, emit matching ids.
+    """Boolean kernel over one salt shard's posting rows (see
+    :meth:`IndexReader.scan`): decode each term's ids (first varint
+    section only — no statistics decode), evaluate the AST on the
+    shard's disjoint doc-id range, emit matching ids.
 
     Tombstones (operators/delete.py) are removed from the RESULT,
     not the operands: the result of any boolean AST is a subset of
@@ -221,12 +221,10 @@ def boolean_search(spark: SparkSession, index_dir: str | IndexReader,
     else:
         terms = sorted({bool_query_term(w, reader.stemmed)
                         for w in _collect_words(ast, [])})
-        rows = reader.postings_for(terms)
-        res = (rows.select("term", "salt", "blocks")
-               .groupBy("salt")
-               .applyInPandas(_eval_shard_kernel(ast, reader.stemmed,
-                                                 reader._dead_bc),
-                              schema="doc_id long"))
+        res = reader.scan(terms,
+                          _eval_shard_kernel(ast, reader.stemmed,
+                                             reader._dead_bc),
+                          pa.schema([("doc_id", pa.int64())]))
     res = res.orderBy("doc_id")
     if with_urls:
         # NO broadcast hint on the result side: a boolean result is

@@ -8,18 +8,32 @@ full sort desc.  Duplicated query terms contribute twice
 we canonicalize with a (score desc, doc_id asc) tiebreak, and the
 oracle does the same (SURVEY.md §7 determinism).
 
-Spark formulation: term → bucket (pure-Python twin of the build's
-xxhash64 expression, no Spark job) selects postings partitions; the
-``dictionary`` table supplies each term's global df (bucket-pruned
-point reads, LRU-cached per reader).  Scoring runs document-
-partitioned — each ``salt`` (doc-range shard created at build time)
-holds every query term's postings for its own doc subset, so one
-``applyInPandas`` group scores that shard independently and emits its
-local top-k; the global answer is ``orderBy(score desc, doc_id
-asc).limit(k)`` (Catalyst TakeOrderedAndProject).  This is the
-classic document-partitioned distributed search fan-out: at 10^12
-docs each shard scores in parallel and only k rows per shard reach
-the final merge.
+Spark formulation: ONE job with ONE stage and no shuffle per query.
+Term → bucket is a pure-Python twin of the build's xxhash64
+expression; each term's global df comes from the snapshot's
+``dictionary`` bucket files, read on the driver with pyarrow and
+cached per bucket (no Spark job).  Scoring runs document-partitioned:
+each ``salt`` (doc-range shard created at build time) holds every
+query term's postings for its own doc subset, so the shard kernel
+scores one salt independently and emits its local top-k.  The tasks
+come from ``spark.range(n_tasks)`` (JVM-only) and ``mapInArrow``: a
+task reads its salts' ``postings/bucket=B/salt=S`` files with pyarrow
+(the query's buckets only, term filter pushed down) and calls the
+kernel once per salt.  Salts are packed into tasks by postings bytes
+against ``spark.sql.files.maxPartitionBytes``, so a small index is
+one task and a large one fans out per salt.  The global answer is
+``orderBy(score desc, doc_id asc).limit(k)`` (Catalyst
+TakeOrderedAndProject), one row set of k per task.
+
+Why one task: each Python task costs ~215 ms of worker CPU before any
+kernel runs.  PySpark's per-task ``setup_spark_files`` calls
+``importlib.invalidate_caches()``, and under CPython 3.11 that
+re-reads ``pyspark.zip`` (1,328 entries) once for each cached
+zipimporter, plus the spark-core jar (measured on a 4-core VM).  A
+whole JVM-only job costs ~60-80 ms there.  So the task source stays
+JVM-only (a ``createDataFrame`` of Python rows would add a second
+Python round trip per task), df lookups stay on the driver, and salts
+share a task until their bytes fill one.
 
 Layout v4: blocks store (delta ids, tf, dl, max_tf) varints; the
 kernel computes the scheme weight from those statistics plus
@@ -44,9 +58,13 @@ from __future__ import annotations
 import math
 import os
 from collections import Counter, OrderedDict
+from functools import cached_property
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions import codec, scoring
 from ..functions.tokenizer import STOPWORDS, vector_query_terms
@@ -137,10 +155,12 @@ class IndexReader:
     ``finalize_index`` are invisible until the next refresh, and
     chunks merged away by compaction stay visible to readers that
     pinned them: corpus_stats references an immutable registry
-    snapshot (chunks.v{dict_version}) and every read filters
-    ``salt``/``chunk`` to its membership, so queries never mix new
-    postings with stale global statistics — or see a doc range
-    twice across a compaction."""
+    snapshot (chunks.v{dict_version}), and the reader lists the
+    postings files of exactly that salt set once when it opens, so
+    queries never mix new postings with stale global statistics — or
+    see a doc range twice across a compaction.  Opening runs no Spark
+    job: stats, registry, tombstones and the file listing are read on
+    the driver."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  at_version: int | None = None):
@@ -165,7 +185,7 @@ class IndexReader:
                 f"published at {index_dir}; retained versions: "
                 f"{list_snapshots(index_dir) or 'none'}")
         self._stats_path = stats_path
-        stats = spark.read.parquet(stats_path).collect()[0]
+        stats = pq.read_table(stats_path).to_pylist()[0]
         check_layout(stats)
         self.n_docs = stats["n_docs"]
         self.avgdl = stats["avgdl"]
@@ -197,13 +217,14 @@ class IndexReader:
             spark.sparkContext.broadcast(
                 dead_by_salt(self.tombstones, registry_rows))
             if self.tombstones.size else None)
-        # one file-listing/schema pass per table, reused by every
-        # query through this reader
-        self._postings = spark.read.parquet(self.paths.postings)
-        self._dictionary = spark.read.parquet(
-            self.paths.dictionary_version(dict_version_of(stats)))
-        self._df_cache: OrderedDict[str, int] = OrderedDict()
-        self._max_df_cache = 65536
+        # the snapshot's postings files, listed ONCE here: later
+        # appends, purges and compactions cannot change what this
+        # reader scans
+        self._files = _list_postings(self.paths.postings, self.salt_map)
+        self._dict_dir = self.paths.dictionary_version(
+            dict_version_of(stats))
+        self._dfs: OrderedDict[int, dict[str, int]] = OrderedDict()
+        self._max_cached_buckets = 64
         # worker-side decoded-postings cache token: changes whenever
         # corpus_stats is republished, so cached decodes can never
         # cross snapshots (even a rebuild at the same path)
@@ -219,28 +240,34 @@ class IndexReader:
         return sorted({spark_term_bucket(t, self.n_buckets)
                        for t in terms})
 
+    def _bucket_dfs(self, bucket: int) -> dict[str, int]:
+        """term -> global df for one dictionary bucket, read on the
+        driver with pyarrow (LRU over buckets)."""
+        hit = self._dfs.get(bucket)
+        if hit is not None:
+            self._dfs.move_to_end(bucket)
+            return hit
+        path = os.path.join(self._dict_dir, f"bucket={bucket}")
+        dfs: dict[str, int] = {}
+        if os.path.isdir(path):
+            t = pq.read_table(path, columns=["term", "df"])
+            dfs = dict(zip(t.column("term").to_pylist(),
+                           t.column("df").to_pylist()))
+        self._dfs[bucket] = dfs
+        if len(self._dfs) > self._max_cached_buckets:
+            self._dfs.popitem(last=False)
+        return dfs
+
     def df_for(self, terms: list[str]) -> dict[str, int]:
-        """Global df per term from the dictionary table (bucket-
-        pruned point reads, LRU-cached).  Terms absent from the
-        dictionary are omitted (df = 0 → no postings either)."""
+        """Global df per term from the snapshot's dictionary (no
+        Spark job).  Terms absent from the dictionary are omitted
+        (df = 0 → no postings either)."""
         out: dict[str, int] = {}
-        missing: list[str] = []
         for t in set(terms):
-            hit = self._df_cache.get(t)
-            if hit is not None:
-                self._df_cache.move_to_end(t)
-                out[t] = hit
-            else:
-                missing.append(t)
-        if missing:
-            rows = (self._dictionary
-                    .where(F.col("bucket").isin(self._buckets_of(missing)))
-                    .where(F.col("term").isin(missing))
-                    .select("term", "df").collect())
-            for r in rows:
-                out[r["term"]] = self._df_cache[r["term"]] = int(r["df"])
-            while len(self._df_cache) > self._max_df_cache:
-                self._df_cache.popitem(last=False)
+            bucket = spark_term_bucket(t, self.n_buckets)
+            df = self._bucket_dfs(bucket).get(t)
+            if df is not None:
+                out[t] = df
         return out
 
     def term_params(self, mult: dict[str, int]
@@ -252,20 +279,55 @@ class IndexReader:
                     float(scoring.bm25_idf(self.n_docs, dfs[t])))
                 for t, m in mult.items() if t in dfs}
 
-    def postings_for(self, terms: list[str]) -> DataFrame:
-        """Posting rows for *terms*, bucket- and snapshot-pruned.
+    @cached_property
+    def _dictionary(self) -> DataFrame:
+        """The snapshot's dictionary as a Spark table (suggest and
+        autocomplete operators)."""
+        return self.spark.read.parquet(self._dict_dir)
 
-        The bucket predicate matches the build's partition layout, so
-        the parquet scan reads only the matching ``bucket=``/``salt=``
-        partitions (partition pruning — verify with .explain:
-        PartitionFilters on ``bucket`` and ``salt``)."""
-        if not terms:
-            return self._postings.limit(0)
-        uniq = sorted(set(terms))
-        return (self._postings
-                .where(F.col("bucket").isin(self._buckets_of(uniq)))
-                .where(F.col("salt").isin(sorted(self.salt_map)))
-                .where(F.col("term").isin(uniq)))
+    def scan_tasks(self, terms: list[str]
+                   ) -> list[list[tuple[int, list[str]]]]:
+        """The postings files a query on *terms* reads, as Spark
+        tasks: each task is a list of (salt, files).
+
+        Only the terms' buckets of this snapshot's salts are read.
+        Salts are packed in order into tasks of at most
+        ``spark.sql.files.maxPartitionBytes`` postings bytes (a salt
+        is never split), so a small index is one task and a large
+        one fans out per salt."""
+        by_salt: dict[int, list[tuple[str, int]]] = {}
+        for bucket in self._buckets_of(terms):
+            for salt, files in self._files.get(bucket, {}).items():
+                by_salt.setdefault(salt, []).extend(files)
+        cap = (self.spark._jsparkSession.sessionState().conf()
+               .filesMaxPartitionBytes())
+        tasks: list[list[tuple[int, list[str]]]] = []
+        size = 0
+        for salt in sorted(by_salt):
+            nbytes = sum(n for _p, n in by_salt[salt])
+            if not tasks or size + nbytes > cap:
+                tasks.append([])
+                size = 0
+            tasks[-1].append((salt, [p for p, _n in by_salt[salt]]))
+            size += nbytes
+        return tasks
+
+    def scan(self, terms: list[str], kernel,
+             schema: pa.Schema) -> DataFrame:
+        """Run ``kernel`` over each salt's posting rows for *terms*
+        in ONE Spark stage with no shuffle.
+
+        The source is ``spark.range`` (JVM-only, one row per task),
+        so the only Python round trip is ``mapInArrow`` itself: each
+        task reads its salts' postings with pyarrow and calls
+        ``kernel`` once per salt that holds any of the terms."""
+        tasks = self.scan_tasks(terms)
+        out_schema = from_arrow_schema(schema)
+        if not tasks:
+            return self.spark.createDataFrame([], out_schema)
+        return (self.spark.range(len(tasks), numPartitions=len(tasks))
+                .mapInArrow(_scan_fn(tasks, sorted(set(terms)), kernel,
+                                     schema), out_schema))
 
     def docs(self) -> DataFrame:
         d = self.spark.read.option("basePath", self.paths.docs).parquet(
@@ -278,6 +340,58 @@ class IndexReader:
                 [(int(x),) for x in self.tombstones], "doc_id long")
             d = d.join(F.broadcast(t), "doc_id", "left_anti")
         return d
+
+
+def _list_postings(root: str, salts
+                   ) -> dict[int, dict[int, list[tuple[str, int]]]]:
+    """bucket -> salt -> [(path, bytes)] of the data files under
+    ``postings/bucket=B/salt=S`` for the salts in *salts*."""
+    out: dict[int, dict[int, list[tuple[str, int]]]] = {}
+    for bdir in os.listdir(root):
+        if not bdir.startswith("bucket="):
+            continue
+        per_salt = out.setdefault(int(bdir[7:]), {})
+        for sdir in os.listdir(os.path.join(root, bdir)):
+            if not (sdir.startswith("salt=") and int(sdir[5:]) in salts):
+                continue
+            with os.scandir(os.path.join(root, bdir, sdir)) as it:
+                files = [(f.path, f.stat().st_size) for f in it
+                         if f.is_file()
+                         and not f.name.startswith(("_", "."))]
+            if files:
+                per_salt[int(sdir[5:])] = files
+    return out
+
+
+def read_salt_postings(salt: int, files: list[str], terms: list[str]):
+    """One salt's posting rows for *terms* as the pandas frame the
+    shard kernels take: (term, salt, blocks)."""
+    import pandas as pd
+    t = pq.read_table(files, columns=["term", "blocks"],
+                      filters=[("term", "in", terms)])
+    return pd.DataFrame({"term": t.column("term").to_pylist(),
+                         "salt": np.full(t.num_rows, salt, np.int32),
+                         "blocks": t.column("blocks").to_pylist()})
+
+
+def _scan_fn(tasks: list[list[tuple[int, list[str]]]], terms: list[str],
+             kernel, schema: pa.Schema):
+    """mapInArrow body of :meth:`IndexReader.scan`: the input rows are
+    task numbers."""
+
+    def fn(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                for salt, files in tasks[i]:
+                    pdf = read_salt_postings(salt, files, terms)
+                    if len(pdf) == 0:
+                        continue
+                    out = kernel(pdf)
+                    if len(out):
+                        yield pa.RecordBatch.from_pandas(
+                            out, schema=schema, preserve_index=False)
+
+    return fn
 
 
 def _block_meta_ub(blocks, idf_v: float, bidf_v: float, wcol: int,
@@ -300,7 +414,8 @@ def _score_shard_kernel(term_params: dict[str, tuple[float, float, float]],
                         k1: float, b: float, cache_token=None,
                         counters: dict | None = None,
                         dead_bc=None):
-    """applyInPandas kernel over one salt shard's posting rows.
+    """Ranked kernel over one salt shard's posting rows (a pandas
+    frame of term, salt, blocks; see :meth:`IndexReader.scan`).
 
     ``salt_map`` maps each shard to its contiguous (first_doc_id,
     size) range; ids become dense positions as ``id - base``.
@@ -420,8 +535,9 @@ def _score_shard_batch_kernel(query_mults: dict[int, dict[str, int]],
                               salt_map: dict[int, tuple[int, int]],
                               avgdl: float, k1: float, b: float,
                               cache_token=None, dead_bc=None):
-    """applyInPandas kernel over one salt shard's posting rows,
-    scoring EVERY query of the batch in a single pass.
+    """Batch kernel over one salt shard's posting rows (see
+    :meth:`IndexReader.scan`), scoring EVERY query of the batch in a
+    single pass.
 
     Each term's blocks decode once; each query then accumulates
     mult x weight over its own terms in sorted-term order — the same
@@ -508,11 +624,9 @@ def vector_topk_batch(spark: SparkSession,
                                      reader.k1, reader.b,
                                      cache_token=reader.cache_token,
                                      dead_bc=reader._dead_bc)
-    rows = reader.postings_for(kern.terms)
-    scored = (rows.select("term", "salt", "blocks")
-              .groupBy("salt")
-              .applyInPandas(kern,
-                             schema="qid int, doc_id long, score double"))
+    scored = reader.scan(kern.terms, kern, pa.schema([
+        ("qid", pa.int32()), ("doc_id", pa.int64()),
+        ("score", pa.float64())]))
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
@@ -561,14 +675,14 @@ def vector_topk(spark: SparkSession, index_dir: str | IndexReader,
     params = reader.term_params(mult)
     if use_pruning == "auto":
         use_pruning = _pruning_pays(params)
-    rows = reader.postings_for(list(params))
-    scored = rows.select("term", "salt", "blocks").groupBy("salt").applyInPandas(
+    scored = reader.scan(
+        list(params),
         _score_shard_kernel(params, scheme, k, reader.salt_map,
                             use_pruning, reader.avgdl, reader.k1,
                             reader.b, cache_token=reader.cache_token,
                             counters=counters,
                             dead_bc=reader._dead_bc),
-        schema="doc_id long, score double")
+        pa.schema([("doc_id", pa.int64()), ("score", pa.float64())]))
     top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     if with_urls:
         # broadcast the k-row result against the big docs table, not

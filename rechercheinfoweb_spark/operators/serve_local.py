@@ -3,12 +3,13 @@
 The reference answers queries in well under a millisecond because its
 whole index lives in process RAM (trie + posting slices).  The Spark
 shard-kernel path (query_vector.py) is the right plan for batch
-retrieval and huge corpora, but every call pays multi-hundred-ms job
-scheduling — wrong for interactive serving.  This module closes that
-gap while keeping ONE index artifact: it reads the SAME
-bucket-partitioned postings + dictionary parquet directly with
-pyarrow (term → bucket via the pure-Python XXH64 twin of the build's
-Spark bucket expression), caches hot buckets, and scores with the
+retrieval and huge corpora, but every call is a Spark job with at
+least one Python task, ~300 ms on a 4-core VM (most of it the
+per-task worker set-up) — wrong for interactive serving.  This
+module closes that gap while keeping ONE index artifact: it reads
+the SAME bucket-partitioned postings + dictionary parquet directly
+with pyarrow (term → bucket via the pure-Python XXH64 twin of the
+build's Spark bucket expression), caches hot buckets, and scores with the
 same numpy block decode + ``scoring.posting_weights`` +
 sorted-term accumulation as the shard kernel — so results are
 rank-identical with scores equal to the last bit.

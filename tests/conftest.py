@@ -5,6 +5,7 @@ single build (SURVEY.md §5 strategy)."""
 
 from __future__ import annotations
 
+import itertools
 import shutil
 
 import pytest
@@ -57,3 +58,26 @@ def index_dir(spark, pages_df, tmp_path_factory) -> str:
 @pytest.fixture(scope="session")
 def reader(spark, index_dir) -> IndexReader:
     return IndexReader(spark, index_dir)
+
+
+@pytest.fixture(scope="session")
+def spark_work(spark):
+    """``spark_work(fn) -> (result, jobs, tasks)``: runs *fn* under a
+    fresh job group and counts the Spark jobs and tasks it ran."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    groups = itertools.count()
+
+    def run(fn):
+        group = f"spark_work_{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        tasks = sum(tracker.getStageInfo(s).numTasks for j in jobs
+                    for s in tracker.getJobInfo(j).stageIds)
+        return out, len(jobs), tasks
+
+    return run

@@ -1,10 +1,12 @@
 """Physical-plan regression tests (SURVEY.md §4): the properties
 that make the engine scale must be visible in the executed plan, not
 assumed — partition pruning on bucket/chunk, term predicate pushdown
-to the parquet scan, column-pruned ReadSchema, broadcast of the
+to the postings read, column-pruned ReadSchema, broadcast of the
 k-row side of the result-projection join."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -15,13 +17,64 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_postings_scan_prunes_and_pushes(reader):
-    plan = _plan(reader.postings_for(["search", "engine"]))
-    # partition pruning on BOTH physical partition keys: bucket
-    # (term routing) and salt (snapshot pinning)
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "bucket" in pf and "salt" in pf, pf
-    assert "PushedFilters: [In(term" in plan
+def _bucket_salt(path: str) -> tuple[int, int]:
+    parts = dict(p.split("=", 1) for p in path.split(os.sep) if "=" in p)
+    return int(parts["bucket"]), int(parts["salt"])
+
+
+def test_scan_reads_query_buckets_of_snapshot_salts(spark, pages_df,
+                                                    tmp_path_factory):
+    """A query's scan reads only its terms' buckets x the reader's
+    snapshot salts, and keeps only its terms' rows.  A salt retired by
+    compaction (kept on disk for older readers) and a salt appended
+    but not yet refreshed both sit in those buckets on disk, and both
+    stay out of the scan."""
+    from rechercheinfoweb_spark.operators.compact import compact_chunks
+    from rechercheinfoweb_spark.operators.index_build import (
+        IndexPaths, build_index,
+    )
+    from rechercheinfoweb_spark.operators.query_vector import (
+        IndexReader, read_salt_postings,
+    )
+    from rechercheinfoweb_spark.sources.web_pages import (
+        synthetic_web_pages,
+    )
+    from rechercheinfoweb_spark.streaming import incremental as inc
+
+    out = str(tmp_path_factory.mktemp("plan_scan"))
+    build_index(spark, pages_df, out, n_chunks=4, n_buckets=8)
+    built = set(IndexReader(spark, out).salt_map)
+    compact_chunks(spark, out, target_docs=80)
+    inc.append_batch(spark, synthetic_web_pages(spark, 10, seed=99)
+                     .selectExpr("concat('new-', url) as url", "text",
+                                 "lang"),
+                     out, batch_id=1, n_buckets=8)
+    reader = IndexReader(spark, out)  # opened after the append
+    snapshot = set(reader.salt_map)
+    terms = ["search", "engin"]
+    buckets = set(reader._buckets_of(terms))
+    postings = IndexPaths(out).postings
+    on_disk = {int(d[5:]) for b in buckets
+               for d in os.listdir(os.path.join(postings, f"bucket={b}"))
+               if d.startswith("salt=")}
+    retired = built - snapshot
+    appended = on_disk - snapshot - built
+    assert retired and retired <= on_disk
+    assert appended
+
+    tasks = reader.scan_tasks(terms)
+    read = {_bucket_salt(f) for task in tasks for _salt, files in task
+            for f in files}
+    assert {b for b, _ in read} <= buckets
+    assert {s for _, s in read} == snapshot
+    assert all(_bucket_salt(f)[1] == salt for task in tasks
+               for salt, files in task for f in files)
+    # the term filter is pushed into the read
+    for task in tasks:
+        for salt, files in task:
+            pdf = read_salt_postings(salt, files, terms)
+            assert set(pdf["term"]) <= set(terms)
+            assert len(pdf) and set(pdf["salt"]) == {salt}
 
 
 def test_stage1_input_prunes_html_and_broadcasts_map(

@@ -55,3 +55,12 @@ def test_not_is_bounded(spark, reader, oracle_index):
     assert boolean_search(
         spark, reader, "search OR NOT engine").count() == \
         len(oracle_index.boolean_query("search OR NOT engine"))
+
+
+def test_one_job_one_task(spark, spark_work, reader):
+    """On the fixture index a boolean query is one Spark job with one
+    task: no join, no shuffle, no range-sort sample."""
+    ids, jobs, tasks = spark_work(lambda: boolean_search(
+        spark, reader, "search AND engine OR ranking").collect())
+    assert ids
+    assert (jobs, tasks) == (1, 1)

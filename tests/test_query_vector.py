@@ -1,9 +1,18 @@
 """Vector-query parity: rank-identical, score-exact vs the oracle,
 WAND pruning exactness (SURVEY.md §5.2)."""
 
+from collections import Counter
+from contextlib import contextmanager
+
 import pytest
 
-from rechercheinfoweb_spark.operators.query_vector import vector_topk
+from rechercheinfoweb_spark.operators.delete import delete_docs
+from rechercheinfoweb_spark.operators.index_build import build_index
+from rechercheinfoweb_spark.operators.query_bool import boolean_search
+from rechercheinfoweb_spark.operators.query_vector import (
+    STOPWORDS, IndexReader, vector_query_terms, vector_topk,
+    vector_topk_batch,
+)
 
 QUERIES = [
     "search engine ranking",
@@ -40,10 +49,8 @@ def test_wand_equals_exhaustive(spark, reader):
 def test_pruning_auto_routes_and_matches(spark, reader):
     """"auto" prunes only when some term is selective (df ≤ N/4 ⇔
     idf ≥ ln 4); either branch returns identical rows."""
-    from collections import Counter
-
     from rechercheinfoweb_spark.operators.query_vector import (
-        _pruning_pays, vector_query_terms, STOPWORDS,
+        _pruning_pays,
     )
     def params_of(q):
         terms = vector_query_terms(q, STOPWORDS)
@@ -75,3 +82,100 @@ def test_with_urls(spark, reader, oracle_index):
     assert [r["url"] for r in rows] == [
         oracle_index.doc_url[d] for d, _ in
         oracle_index.vector_query("search engine", "bm25", k=5)]
+
+
+def test_one_job_one_task_per_query(spark, spark_work, reader, index_dir):
+    """On the fixture index a ranked query (pruning on or off) and a
+    query batch each run as ONE Spark job with ONE task, and term
+    statistics come from the driver with no job at all."""
+    for mode in (True, False):
+        rows, jobs, tasks = spark_work(lambda: vector_topk(
+            spark, reader, "search engine ranking", "bm25", k=10,
+            use_pruning=mode).collect())
+        assert len(rows) == 10
+        assert (jobs, tasks) == (1, 1), mode
+    rows, jobs, tasks = spark_work(lambda: vector_topk_batch(
+        spark, reader, {1: "search engine", 2: "spark shuffle partition"},
+        k=10).collect())
+    assert {r["qid"] for r in rows} == {1, 2}
+    assert (jobs, tasks) == (1, 1)
+    mult = dict(Counter(vector_query_terms(
+        "search engine ranking missingterm", STOPWORDS)))
+    fresh = IndexReader(spark, index_dir)  # no dictionary bucket cached
+    params, jobs, _ = spark_work(lambda: fresh.term_params(mult))
+    assert jobs == 0
+    assert params == reader.term_params(mult) and len(params) == 3
+
+
+@contextmanager
+def _task_per_salt(spark):
+    """Shrink the task byte budget so that every salt is its own task."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture(scope="module")
+def tombstoned_index(spark, pages_df, oracle_index, tmp_path_factory):
+    """Three salts, with tombstones in each and among the top ranks."""
+    out = str(tmp_path_factory.mktemp("tombstoned"))
+    build_index(spark, pages_df, out, n_chunks=3, n_buckets=8)
+    top = [d for d, _ in oracle_index.vector_query(
+        "search engine ranking", "bm25", k=10)]
+    dead = {top[0], top[3], 7, 70, 140}
+    delete_docs(spark, out, doc_ids=sorted(dead))
+    return out, dead
+
+
+MULTI_VECTOR = ["search engine ranking", "webpage content information",
+                "term0556 search", "search search engine",
+                "varint delta snappy BM25 WAND Zipf Heaps"]
+MULTI_BOOL = ["search AND engine", "search OR engine",
+              "search AND NOT engine", "running OR skies AND NOT webpage"]
+
+
+@pytest.mark.parametrize("with_deletes", [False, True])
+def test_task_per_salt_equals_one_task(spark, spark_work, oracle_index,
+                                       index_dir, tombstoned_index,
+                                       with_deletes):
+    """Fanning the scan out to one task per salt changes nothing: every
+    ranked (pruning on/off/auto), batch and boolean answer equals the
+    one-task plan's and the oracle's, tombstones included."""
+    out, dead = tombstoned_index if with_deletes else (index_dir, set())
+    r = IndexReader(spark, out)
+
+    def answers():
+        vec = {(q, mode): [(x["doc_id"], x["score"]) for x in vector_topk(
+            spark, r, q, "bm25", k=10, use_pruning=mode).collect()]
+            for q in MULTI_VECTOR for mode in (True, False, "auto")}
+        batch: dict[int, list] = {}
+        for x in sorted(vector_topk_batch(
+                spark, r, dict(enumerate(MULTI_VECTOR)), k=10).collect(),
+                key=lambda x: (x["qid"], x["rank"])):
+            batch.setdefault(x["qid"], []).append((x["doc_id"], x["score"]))
+        boolean = {q: [x["doc_id"] for x in
+                       boolean_search(spark, r, q).collect()]
+                   for q in MULTI_BOOL}
+        return vec, batch, boolean
+
+    one, jobs, tasks = spark_work(answers)
+    assert tasks == jobs  # one task per job
+    with _task_per_salt(spark):
+        assert len(r.scan_tasks(["search"])) == len(r.salt_map) > 1
+        split, jobs, tasks = spark_work(answers)
+    assert tasks > jobs  # the scans fanned out
+    assert split == one
+    vec, batch, boolean = one
+    for (q, _mode), got in vec.items():
+        want = [(d, s) for d, s in oracle_index.vector_query(
+            q, "bm25", k=10**6) if d not in dead][:10]
+        assert got == want, q
+    for qid, q in enumerate(MULTI_VECTOR):
+        assert batch[qid] == vec[(q, False)], q
+    for q, got in boolean.items():
+        assert got == [d for d in oracle_index.boolean_query(q)
+                       if d not in dead], q
