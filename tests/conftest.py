@@ -63,7 +63,12 @@ def reader(spark, index_dir) -> IndexReader:
 @pytest.fixture(scope="session")
 def spark_work(spark):
     """``spark_work(fn) -> (result, jobs, tasks)``: runs *fn* under a
-    fresh job group and counts the Spark jobs and tasks it ran."""
+    fresh job group and counts the Spark jobs and tasks it ran.  Tasks
+    are the jobs' completed + failed ones: a stage a job lists but
+    skips (an adaptive plan's result job lists its already-run
+    shuffle map stage again) ran none.  Job-level counts need no
+    per-stage info, which the status store may already have evicted;
+    a job it cannot find raises."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     groups = itertools.count()
@@ -75,9 +80,12 @@ def spark_work(spark):
             out = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = tracker.getJobIdsForGroup(group)
-        tasks = sum(tracker.getStageInfo(s).numTasks for j in jobs
-                    for s in tracker.getJobInfo(j).stageIds)
+        store = sc._jsc.sc().statusStore()
+        tasks = sum(d.numCompletedTasks() + d.numFailedTasks()
+                    for d in map(store.job, jobs))
         return out, len(jobs), tasks
 
     return run

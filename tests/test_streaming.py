@@ -11,10 +11,16 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from rechercheinfoweb_spark.operators.index_build import build_index
+from rechercheinfoweb_spark.functions import codec
+from rechercheinfoweb_spark.functions.tokenizer import STOPWORDS
+from rechercheinfoweb_spark.operators.index_build import (
+    IndexPaths, build_index,
+)
 from rechercheinfoweb_spark.operators.query_vector import (
     IndexReader, vector_topk,
 )
@@ -109,6 +115,181 @@ def test_append_batch_reconciles_after_crash(spark, tmp_path_factory):
     m = read_manifest(out, "stream-batch-000001")
     assert m is not None and m.get("reconciled") is True
     assert m["n_docs"] == 10
+
+
+def _rows(path: str, keys: tuple[str, ...]) -> list[dict]:
+    """Rows of a hive-partitioned parquet dir, sorted by *keys*."""
+    t = ds.dataset(path, partitioning="hive").to_table()
+    return sorted(t.to_pylist(), key=lambda r: tuple(r[k] for k in keys))
+
+
+def _published(out: str) -> tuple[dict, dict[str, int]]:
+    """(corpus_stats, term -> df) of an index's live snapshot."""
+    paths = IndexPaths(out)
+    stats = pq.read_table(paths.corpus_stats).to_pylist()[0]
+    dictionary = _rows(paths.dictionary_version(stats["dict_version"]),
+                       ("term",))
+    return stats, {r["term"]: r["df"] for r in dictionary}
+
+
+def _url_sorted_pages(spark, n: int) -> list:
+    """Pages in url order: split into batches in this order, appends
+    assign the same doc ids as a batch build, so score ties rank the
+    same."""
+    return sorted(synthetic_web_pages(spark, n).collect(),
+                  key=lambda r: r["url"])
+
+
+def _same_topk(spark, out: str, ref: str) -> None:
+    for query in ("search engine ranking", "Spark shuffle"):
+        a = [(r["url"], r["score"]) for r in
+             vector_topk(spark, out, query, "bm25", k=10,
+                         with_urls=True).collect()]
+        b = [(r["url"], r["score"]) for r in
+             vector_topk(spark, ref, query, "bm25", k=10,
+                         with_urls=True).collect()]
+        assert len(a) == len(b) > 0
+        for (ua, sa), (ub, sb) in zip(a, b):
+            assert ua == ub and abs(sa - sb) < 1e-9
+
+
+def test_append_is_one_job_one_task(spark, spark_work, tmp_path_factory):
+    """The whole append (ids, tokenize, pack, write) is one Spark
+    query: the source's side of one single-partition exchange, then
+    one kernel task, whatever the bucket count.  Adaptive execution
+    runs the exchange's map stage as its own job, hence two."""
+    out = str(tmp_path_factory.mktemp("one_task_idx"))
+    rows = synthetic_web_pages(spark, 30).collect()
+    src = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+                                WEB_PAGES_SCHEMA)
+    info, jobs, tasks = spark_work(
+        lambda: inc.append_batch(spark, src, out, batch_id=0))
+    assert info["n_docs"] == 30
+    assert jobs <= 2
+    assert tasks <= src.rdd.getNumPartitions() + 1
+
+
+def test_append_equals_one_chunk_build(spark, tmp_path_factory):
+    """An append into an empty dir writes the same docs and postings
+    rows (block bytes included) as a one-chunk build over the same
+    pages; after a refresh the dictionary and corpus_stats match
+    too."""
+    pages = synthetic_web_pages(spark, 60)
+    out = str(tmp_path_factory.mktemp("app_idx"))
+    ref = str(tmp_path_factory.mktemp("one_chunk_idx"))
+    build_index(spark, pages, ref, n_chunks=1, n_buckets=8)
+    assert inc.append_batch(spark, pages, out, batch_id=0,
+                            n_buckets=8)["chunk"] == 0
+    for table, keys in (("docs", ("doc_id",)),
+                        ("postings", ("bucket", "term"))):
+        got = _rows(os.path.join(out, table), keys)
+        want = _rows(os.path.join(ref, table), keys)
+        assert len(got) == len(want) > 0
+        assert got == want, table
+    # the kernel tokenizes in doc slices and codes terms against one
+    # batch vocabulary; run it in-process with slices of 7 docs
+    sliced = str(tmp_path_factory.mktemp("sliced_idx"))
+    kernel = inc._append_chunk_kernel(sliced, 0, 1, 8, codec.DEFAULT_BLOCK,
+                                      STOPWORDS, True, doc_slice=7)
+    src = pages.select("url", "text", "lang").toArrow()
+    assert [b.to_pylist() for b in kernel(src.to_batches(max_chunksize=13))] \
+        == [[{"n_docs": 60}]]
+    for table, keys in (("docs", ("doc_id",)),
+                        ("postings", ("bucket", "term"))):
+        assert _rows(os.path.join(sliced, table), keys) \
+            == _rows(os.path.join(ref, table), keys), table
+    inc.refresh(spark, out, n_buckets=8)
+    (s_out, d_out), (s_ref, d_ref) = _published(out), _published(ref)
+    assert d_out == d_ref
+    s_out.pop("dict_version")
+    s_ref.pop("dict_version")
+    assert s_out == s_ref
+
+
+def test_refresh_keeps_build_parameters(spark, tmp_path_factory):
+    """An append and a refresh keep the index's own k1, b and block
+    size (and bucket count) instead of the functions' defaults."""
+    params = dict(k1=1.5, b=0.5, block_size=16, n_buckets=8)
+    pages = _url_sorted_pages(spark, 120)
+    out = str(tmp_path_factory.mktemp("params_idx"))
+    build_index(spark, spark.createDataFrame(pages[:80], WEB_PAGES_SCHEMA),
+                out, n_chunks=2, **params)
+    info = inc.append_batch(
+        spark, spark.createDataFrame(pages[80:], WEB_PAGES_SCHEMA), out,
+        batch_id=1)
+    inc.refresh(spark, out)
+    stats, _ = _published(out)
+    assert {k: stats[k] for k in params} == params
+    blocks = ds.dataset(IndexPaths(out).postings, partitioning="hive") \
+        .to_table(filter=ds.field("salt") == info["chunk"]) \
+        .column("blocks").to_pylist()
+    assert max(len(bl) for bl in blocks) > 1
+    assert max(blk["n"] for bl in blocks for blk in bl) == 16
+
+    ref = str(tmp_path_factory.mktemp("params_ref"))
+    build_index(spark, spark.createDataFrame(pages, WEB_PAGES_SCHEMA),
+                ref, n_chunks=2, **params)
+    _same_topk(spark, out, ref)
+
+
+def test_empty_batch_does_not_wedge_ingestion(spark, tmp_path_factory):
+    """An empty micro-batch (a filtered source can deliver one) adds
+    no chunk; later refreshes and appends work, and its replay is a
+    no-op."""
+    pages = _url_sorted_pages(spark, 60)
+    out = str(tmp_path_factory.mktemp("empty_idx"))
+    inc.append_batch(spark, spark.createDataFrame(pages[:40],
+                                                  WEB_PAGES_SCHEMA),
+                     out, batch_id=0, n_buckets=8)
+    inc.refresh(spark, out, n_buckets=8)
+    empty = spark.createDataFrame([], WEB_PAGES_SCHEMA)
+    info = inc.append_batch(spark, empty, out, batch_id=1)
+    assert info["n_docs"] == 0 and info["chunk"] is None
+    inc.refresh(spark, out)
+    inc.append_batch(spark, spark.createDataFrame(pages[40:],
+                                                  WEB_PAGES_SCHEMA),
+                     out, batch_id=2)
+    inc.refresh(spark, out)
+    assert inc.append_batch(spark, empty, out, batch_id=1) is None
+    reg = inc.read_registry(IndexPaths(out).chunks)
+    assert [(r["chunk"], r["batch_id"]) for r in reg] == [(0, 0), (1, 2)]
+    assert IndexReader(spark, out).n_docs == 60
+
+    ref = str(tmp_path_factory.mktemp("empty_ref"))
+    build_index(spark, spark.createDataFrame(pages, WEB_PAGES_SCHEMA),
+                ref, n_chunks=2, n_buckets=8)
+    _same_topk(spark, out, ref)
+
+
+def test_append_clears_orphaned_chunk_dirs(spark, tmp_path_factory):
+    """A compaction that crashed before its registry commit leaves
+    postings/docs dirs under the chunk id the next append takes.  The
+    append must replace all of them, not only the buckets its own
+    terms touch, or the refresh publishes inflated df."""
+    import shutil
+
+    out = str(tmp_path_factory.mktemp("orphan_idx"))
+    build_index(spark, synthetic_web_pages(spark, 80), out, n_chunks=2,
+                n_buckets=8)
+    paths = IndexPaths(out)
+    for bdir in os.listdir(paths.postings):
+        if bdir.startswith("bucket="):
+            shutil.copytree(os.path.join(paths.postings, bdir, "salt=0"),
+                            os.path.join(paths.postings, bdir, "salt=2"))
+    shutil.copytree(os.path.join(paths.docs, "chunk=0"),
+                    os.path.join(paths.docs, "chunk=2"))
+    stats, before = _published(out)
+
+    page = (synthetic_web_pages(spark, 1, seed=5)
+            .withColumn("url", F.lit("https://orphan.example/1"))
+            .withColumn("text", F.lit("zebraquux")))
+    assert inc.append_batch(spark, page, out, batch_id=1)["chunk"] == 2
+    inc.refresh(spark, out)
+    stats, after = _published(out)
+    assert stats["n_docs"] == 81
+    new = set(after) - set(before)
+    assert len(new) == 1 and after[new.pop()] == 1
+    assert {t: after[t] for t in before} == before
 
 
 def test_live_readers_pin_snapshot_across_append_and_refresh(
