@@ -20,9 +20,11 @@ stage 1  **chunk c**   (one per chunk, independently resumable)
                        ``postings/bucket=b/salt=c`` + ``docs/chunk=c``
                        directly: the queryable index IS the stage-1
                        output, immutable once written.
-stage 2  **finalize**  metadata only: global df per term (the
-                       ``dictionary`` table), corpus_stats
-                       (n_docs/avgdl/vocab/Heaps).  NO posting bytes
+stage 2  **finalize**  metadata only: global df and first doc id
+                       (``min_doc_id``) per term (the ``dictionary``
+                       table), corpus_stats (n_docs/avgdl/vocab/
+                       Heaps, with the Heaps prefix token count
+                       ``t_half``).  NO posting bytes
                        are read or rewritten — scheme weights are
                        computed at query time from the stored
                        (tf, dl, max_tf) through the same
@@ -34,7 +36,12 @@ stage 2  **finalize**  metadata only: global df per term (the
                        — the dominant serial cost at realistic
                        vocabularies, and the reason streaming refresh
                        was a full rewrite.  v4 makes refresh two tiny
-                       aggregations.)
+                       aggregations.)  ``min_doc_id`` and ``t_half``
+                       let a streaming refresh publish appended
+                       chunks as a delta on the previous version
+                       (streaming/incremental.py) — both are
+                       additive columns, so older v4 indexes stay
+                       readable and take one full finalize first.
 
 Skew: a df≈N hot term never concentrates — its postings are split
 across chunks by construction (salt = chunk id), and the index keeps
@@ -551,12 +558,14 @@ def finalize_index(spark: SparkSession, out_dir: str, *,
                    stemmed: bool | None = None,
                    expected_n_docs: int | None = None) -> dict:
     """Stage 2: global metadata over ALL chunks in the registry —
-    the ``dictionary`` table (term → global df, bucket-partitioned
-    for the same pruning as postings) and ``corpus_stats``.  Shared
-    by the batch build and the streaming refresh
-    (streaming/incremental.py): appended chunks change only these
-    two small tables (idf/avgdl/df are applied at query time), so a
-    refresh never touches posting bytes."""
+    the ``dictionary`` table (term → global df and first doc id,
+    bucket-partitioned for the same pruning as postings) and
+    ``corpus_stats``.  The publish of the batch build and of
+    compaction, and the streaming refresh's fallback whenever its
+    delta (streaming/incremental.py) cannot prove its result equal
+    to this one: appended chunks change only these two small tables
+    (idf/avgdl/df are applied at query time), so a refresh never
+    touches posting bytes."""
     paths = IndexPaths(out_dir)
     if stemmed is None:
         # refresh/compact path: preserve the flag the index was
@@ -581,9 +590,10 @@ def finalize_index(spark: SparkSession, out_dir: str, *,
         F.sum(F.when(F.col("doc_id") <= half, F.col("n_raw"))
               .otherwise(F.lit(0))).alias("t_half"),
     ).collect()[0]
-    assert stats_row["n_docs"] == n_docs, \
-        "docs chunks disagree with registry/stage0"
-    avgdl = stats_row["sum_dl"] / n_docs if n_docs else 0.0
+    if stats_row["n_docs"] != n_docs:
+        raise ValueError(
+            f"docs chunks hold {stats_row['n_docs']} docs, the "
+            f"registry/stage0 says {n_docs}")
 
     # Global df per term: reads ONLY (term, df_part, min_doc_id) —
     # parquet column pruning never touches the block bytes.
@@ -598,7 +608,6 @@ def finalize_index(spark: SparkSession, out_dir: str, *,
         F.count("*").alias("vocab"),
         F.count(F.when(F.col("min_doc_id") <= half, True))
          .alias("v_half")).collect()[0]
-    vocab = vocab_row["vocab"]
     # dictionary: bucket-partitioned like postings so a query's term
     # lookups prune identically; repartition first so each bucket is
     # one task/file, not a sliver from every shuffle task.  Written
@@ -606,67 +615,90 @@ def finalize_index(spark: SparkSession, out_dir: str, *,
     # corpus_stats — the single atomic commit point — references it:
     # a crash anywhere in finalize leaves readers on the previous
     # fully-consistent (dictionary, stats) pair, never a mix of new
-    # df values with old postings pins.
+    # df values with old postings pins.  min_doc_id is kept so a
+    # streaming refresh can move the Heaps half-point as a delta.
     dict_version = _next_dict_version(paths)
     (df_table
-     .select("term", "df", term_bucket(F.col("term"), n_buckets)
-             .alias("bucket"))
+     .select("term", "df", "min_doc_id",
+             term_bucket(F.col("term"), n_buckets).alias("bucket"))
      .repartition(n_buckets, "bucket")
      .write.partitionBy("bucket").mode("overwrite")
      .parquet(paths.dictionary_version(dict_version)))
-
-    # Heaps two-point fit (reference stat.go:15-33): V = K · T^B using
-    # the full corpus and the doc_id ≤ N/2 prefix.
-    v_half = vocab_row["v_half"]
-    t_half = int(stats_row["t_half"] or 0)
-    t_total = int(stats_row["n_raw_tokens"] or 0)
-    heaps_b, heaps_k = float("nan"), float("nan")
-    if v_half and t_half and t_total and vocab and t_total != t_half:
-        heaps_b = math.log(vocab / v_half) / math.log(t_total / t_half)
-        heaps_k = vocab / (t_total ** heaps_b)
     df_table.unpersist()
 
-    max_chunk = max(chunk_list) if chunk_list else -1
+    return publish_snapshot(
+        paths, dict_version, registry, n_docs=n_docs,
+        n_raw_tokens=int(stats_row["n_raw_tokens"] or 0),
+        sum_dl=int(stats_row["sum_dl"] or 0),
+        t_half=int(stats_row["t_half"] or 0),
+        vocab=vocab_row["vocab"], v_half=vocab_row["v_half"],
+        n_buckets=n_buckets, block_size=block_size, k1=k1, b=b,
+        stemmed=stemmed)
+
+
+def publish_snapshot(paths: IndexPaths, version: int,
+                     registry: list[dict], *, n_docs: int,
+                     n_raw_tokens: int, sum_dl: int, t_half: int,
+                     vocab: int, v_half: int, n_buckets: int,
+                     block_size: int, k1: float, b: float,
+                     stemmed: bool) -> dict:
+    """Commit snapshot *version* — the one publish tail of the full
+    finalize and the streaming delta refresh, whose dictionary
+    version dir must already be fully written.
+
+    ``t_half`` / ``v_half`` are the raw tokens of docs with
+    ``doc_id <= n_docs // 2`` and the terms whose first doc lies in
+    that prefix: the Heaps two-point fit (reference stat.go:15-33),
+    V = K · T^B over the full corpus and that prefix, is derived
+    here so both paths publish the same floats."""
+    avgdl = sum_dl / n_docs if n_docs else 0.0
+    heaps_b, heaps_k = float("nan"), float("nan")
+    if v_half and t_half and n_raw_tokens and vocab \
+            and n_raw_tokens != t_half:
+        heaps_b = (math.log(vocab / v_half)
+                   / math.log(n_raw_tokens / t_half))
+        heaps_k = vocab / (n_raw_tokens ** heaps_b)
+    max_chunk = max((r["chunk"] for r in registry), default=-1)
     # registry snapshot: the immutable chunk set readers of THIS
     # snapshot may scan (required once compaction renames chunks —
     # see snapshot_registry).  Written before the stats commit under
     # the same version number as the dictionary, so (dictionary,
     # registry, stats) publish together or not at all.
-    write_registry(paths.chunks_version(dict_version), registry)
+    write_registry(paths.chunks_version(version), registry)
     # the COMMIT: one atomically-replaced parquet file (all values
     # are driver-side scalars — no Spark write, whose delete-then-
     # write overwrite is not crash-atomic).  Readers resolve the
     # dictionary through dict_version, so both tables publish
     # together or not at all.
     stats_values = dict(
-        n_docs=n_docs, n_raw_tokens=t_total,
-        sum_dl=int(stats_row["sum_dl"] or 0), avgdl=avgdl,
-        vocabulary=vocab, heaps_b=heaps_b, heaps_k=heaps_k,
-        n_chunks=len(chunk_list), max_chunk=max_chunk,
-        n_buckets=n_buckets, block_size=block_size, k1=k1, b=b,
-        layout=INDEX_LAYOUT_VERSION, dict_version=dict_version,
+        n_docs=n_docs, n_raw_tokens=n_raw_tokens, sum_dl=sum_dl,
+        t_half=t_half, avgdl=avgdl, vocabulary=vocab,
+        heaps_b=heaps_b, heaps_k=heaps_k, n_chunks=len(registry),
+        max_chunk=max_chunk, n_buckets=n_buckets,
+        block_size=block_size, k1=k1, b=b,
+        layout=INDEX_LAYOUT_VERSION, dict_version=version,
         stemmed=int(stemmed))
     # immutable snapshot record FIRST (time-travel entry point —
     # consistent even if orphaned by a crash here, since the
     # dictionary + registry it references are already fully
     # written), then the live commit
-    _write_corpus_stats(paths.corpus_stats_version(dict_version),
+    _write_corpus_stats(paths.corpus_stats_version(version),
                         **stats_values)
     _write_corpus_stats(paths.corpus_stats, **stats_values)
-    _prune_dict_versions(paths, keep_from=dict_version - 1)
+    _prune_dict_versions(paths, keep_from=version - 1)
     return {"n_docs": n_docs, "vocabulary": vocab, "avgdl": avgdl,
             "heaps_b": heaps_b, "heaps_k": heaps_k,
-            "n_chunks": len(chunk_list), "max_chunk": max_chunk,
-            "dict_version": dict_version}
+            "n_chunks": len(registry), "max_chunk": max_chunk,
+            "dict_version": version}
 
 
 _CORPUS_STATS_TYPES = {
     "n_docs": "int64", "n_raw_tokens": "int64", "sum_dl": "int64",
-    "avgdl": "float64", "vocabulary": "int64", "heaps_b": "float64",
-    "heaps_k": "float64", "n_chunks": "int32", "max_chunk": "int32",
-    "n_buckets": "int32", "block_size": "int32", "k1": "float64",
-    "b": "float64", "layout": "int32", "dict_version": "int32",
-    "stemmed": "int32",
+    "t_half": "int64", "avgdl": "float64", "vocabulary": "int64",
+    "heaps_b": "float64", "heaps_k": "float64", "n_chunks": "int32",
+    "max_chunk": "int32", "n_buckets": "int32", "block_size": "int32",
+    "k1": "float64", "b": "float64", "layout": "int32",
+    "dict_version": "int32", "stemmed": "int32",
 }
 
 

@@ -36,17 +36,35 @@ grows with the batch too: one Python worker peaked at 0.86 GB for
 
 Queries keep working against the last finalized snapshot while
 batches accumulate (readers pin the registry snapshot corpus_stats
-references and filter new salts out); :func:`refresh` re-runs the
-shared ``finalize_index``, which under layout v4 is METADATA-ONLY —
-two aggregations rebuilding the dictionary (global df) and
-corpus_stats — because scheme weights are computed at query time.
-No posting bytes are ever rewritten, but the df aggregation reads the
-(term, df_part, min_doc_id) columns of every snapshot postings row,
-so a refresh costs O(index metadata), not O(batch).  Long-running
-ingestion bounds its chunk count (and with it per-query shard
-fan-out) with :func:`..operators.compact.compact_chunks` on whatever
-cadence fits — compaction cost is proportional to the chunks merged,
-not the index.
+references and filter new salts out); :func:`refresh` publishes the
+next snapshot.  It is METADATA-ONLY — the dictionary (global df and
+first doc id per term) and corpus_stats — because scheme weights
+are computed at query time, and for the usual case, chunks appended
+on top of the live snapshot, it is a delta with no Spark job: the
+driver adds the new chunks' docs to corpus_stats (and the raw tokens
+of docs the Heaps half-point passes) and merges the new salts'
+(term, df_part, min_doc_id) rows into the previous dictionary
+version one bucket at a time with pyarrow.  A refresh therefore
+costs O(batch + vocabulary), whatever the index's posting count.
+The full ``finalize_index`` (one aggregation over every snapshot
+postings row) publishes instead whenever the delta cannot prove its
+result equal:
+
+* the index was never finalized;
+* a live-snapshot chunk is missing from the working registry or
+  changed there (compaction, a delete purge, a crashed compaction's
+  registry), or an unpublished chunk's ids do not start above the
+  snapshot's;
+* the snapshot predates the dictionary's ``min_doc_id`` or
+  corpus_stats' ``t_half`` column (once: the full finalize writes
+  both).
+
+Both paths commit through the same ``publish_snapshot`` tail.
+Long-running ingestion bounds its chunk count (and with it
+per-query shard fan-out) with
+:func:`..operators.compact.compact_chunks` on whatever cadence fits
+— compaction cost is proportional to the chunks merged, not the
+index.
 
 Exactly-once: Structured Streaming's checkpoint (WAL + committed
 offsets) guarantees each micro-batch is delivered once to
@@ -88,10 +106,15 @@ from ..functions.tokenizer import STOPWORDS
 from ..functions.xxhash import spark_term_bucket
 from ..operators.index_build import (
     _KERNEL_DOC_SLICE, DOC_STATS_SCHEMA, POSTINGS_SCHEMA, IndexPaths,
-    _batch_token_stats, _make_unique_token_lut, _pack_postings_kernel,
-    finalize_index, read_registry, stemmed_of, write_registry,
+    _batch_token_stats, _make_unique_token_lut, _next_dict_version,
+    _pack_postings_kernel, finalize_index, publish_snapshot,
+    read_registry, stemmed_of, write_registry,
 )
 from ..plans.checkpoints import read_manifest, write_manifest
+
+# manifest in which the first append into an empty dir records the
+# bucket count and block size its chunk was written with
+_LAYOUT_MANIFEST = "stream-layout"
 
 
 def _index_params(paths: IndexPaths, n_buckets: int,
@@ -100,10 +123,13 @@ def _index_params(paths: IndexPaths, n_buckets: int,
     index.  An append MUST bucket terms (a physical partition dir)
     and pack blocks exactly like it, and a refresh must republish its
     k1/b, so once the index has been finalized corpus_stats wins over
-    the arguments."""
+    the arguments, and before that the layout the first append
+    recorded does."""
     import pyarrow.parquet as pq
     if not os.path.exists(paths.corpus_stats):
-        return {"n_buckets": n_buckets, "block_size": block_size,
+        layout = read_manifest(paths.out_dir, _LAYOUT_MANIFEST) or {}
+        return {"n_buckets": int(layout.get("n_buckets", n_buckets)),
+                "block_size": int(layout.get("block_size", block_size)),
                 "k1": scoring.K1, "b": scoring.B}
     stats = pq.read_table(paths.corpus_stats).to_pylist()[0]
     return {"n_buckets": int(stats["n_buckets"]),
@@ -245,8 +271,9 @@ def append_batch(spark: SparkSession, batch_df: DataFrame,
     batch — deterministic given the batch content).  Idempotent per
     batch_id: a replayed batch whose manifest OR registry row exists
     is skipped (see module docstring for the crash-window analysis).
-    ``n_buckets`` and ``block_size`` apply only to an index that has
-    never been finalized; afterwards corpus_stats fixes both.
+    ``n_buckets`` and ``block_size`` apply only to the first append
+    into an empty dir; afterwards the layout it recorded, then
+    corpus_stats, fixes both.
     """
     paths = IndexPaths(out_dir)
     os.makedirs(out_dir, exist_ok=True)
@@ -271,6 +298,11 @@ def append_batch(spark: SparkSession, batch_df: DataFrame,
             })
             return None
     ts = time.time()
+    if not reg and not os.path.exists(paths.corpus_stats):
+        # the first chunk fixes the layout of every later append and
+        # of the first refresh
+        write_manifest(out_dir, _LAYOUT_MANIFEST,
+                       {"n_buckets": n_buckets, "block_size": block_size})
     params = _index_params(paths, n_buckets, block_size)
     n_buckets, block_size = params["n_buckets"], params["block_size"]
     # appended chunks MUST tokenize exactly like the existing index
@@ -316,13 +348,122 @@ def append_batch(spark: SparkSession, batch_df: DataFrame,
 def refresh(spark: SparkSession, out_dir: str, *,
             n_buckets: int = 16,
             block_size: int = codec.DEFAULT_BLOCK) -> dict:
-    """Publish all appended chunks to queries: rebuild the dictionary
-    (global df) + corpus_stats and bump max_chunk.  Metadata-only
-    under layout v4 — posting bytes are untouched.  A finalized
-    index keeps its own n_buckets, block_size, k1 and b."""
-    return finalize_index(
-        spark, out_dir,
-        **_index_params(IndexPaths(out_dir), n_buckets, block_size))
+    """Publish all appended chunks to queries: the next dictionary
+    version (global df) + corpus_stats.  Metadata-only — posting
+    bytes are untouched — and, for chunks appended on top of the
+    live snapshot, a driver-side delta with no Spark job (see module
+    docstring); anything else runs the full ``finalize_index``.  A
+    finalized index keeps its own n_buckets, block_size, k1 and b."""
+    paths = IndexPaths(out_dir)
+    info = _delta_refresh(paths)
+    if info is None:
+        info = finalize_index(
+            spark, out_dir, **_index_params(paths, n_buckets, block_size))
+    return info
+
+
+def _delta_refresh(paths: IndexPaths) -> dict | None:
+    """Publish the live snapshot ⊕ the chunks appended since: their
+    docs' counts and token sums on top of corpus_stats, and their
+    (term, df_part, min_doc_id) rows merged into the previous
+    dictionary one bucket at a time — pyarrow on the driver, reading
+    no postings but the new salts'.  Returns None, having written
+    nothing, unless every live-snapshot chunk is still in the working
+    registry unchanged, every other chunk's ids start above the
+    snapshot's, and the snapshot has the ``t_half`` and
+    ``min_doc_id`` columns: the result then equals a full finalize's
+    (pinned by tests/test_streaming.py)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    if not os.path.exists(paths.corpus_stats):
+        return None
+    stats = pq.read_table(paths.corpus_stats).to_pylist()[0]
+    version = stats.get("dict_version")
+    if version is None or stats.get("t_half") is None:
+        return None
+    snap_path = paths.chunks_version(version)
+    prev_dict = paths.dictionary_version(version)
+    if not (os.path.exists(snap_path) and os.path.isdir(prev_dict)
+            and "min_doc_id" in ds.dataset(prev_dict).schema.names):
+        return None
+    snap, working = read_registry(snap_path), read_registry(paths.chunks)
+
+    def key(r):
+        return r["chunk"], r["min_id"], r["n_docs"], r["span"]
+    if (not {key(r) for r in snap} <= {key(r) for r in working}
+            or sum(r["n_docs"] for r in snap) != stats["n_docs"]):
+        return None
+    old_chunks = {r["chunk"] for r in snap}
+    last_id = max((r["min_id"] + r["span"] - 1 for r in snap), default=0)
+    new = [r for r in working if r["chunk"] not in old_chunks]
+    if any(r["min_id"] <= last_id for r in new):
+        return None
+
+    # docs: the new chunks' sums, and the raw tokens of docs the
+    # Heaps half-point passes (old_half < doc_id <= half), read only
+    # from the chunks whose id range overlaps that interval
+    n_docs = stats["n_docs"] + sum(r["n_docs"] for r in new)
+    old_half, half = stats["n_docs"] // 2, n_docs // 2
+    n_raw_tokens, sum_dl = stats["n_raw_tokens"], stats["sum_dl"]
+    t_half = stats["t_half"]
+    for r in working:
+        is_new = r["chunk"] not in old_chunks
+        if not is_new and (r["min_id"] + r["span"] - 1 <= old_half
+                           or r["min_id"] > half):
+            continue
+        docs = pq.read_table(
+            os.path.join(paths.docs, f"chunk={r['chunk']}"),
+            columns=["doc_id", "dl", "n_raw"])
+        if is_new:
+            if docs.num_rows != r["n_docs"]:
+                raise ValueError(
+                    f"docs chunk {r['chunk']} holds {docs.num_rows} "
+                    f"docs, the registry says {r['n_docs']}")
+            n_raw_tokens += pc.sum(docs["n_raw"]).as_py() or 0
+            sum_dl += pc.sum(docs["dl"]).as_py() or 0
+        passed = pc.and_(pc.greater(docs["doc_id"], old_half),
+                         pc.less_equal(docs["doc_id"], half))
+        t_half += pc.sum(docs["n_raw"].filter(passed)).as_py() or 0
+
+    # dictionary: previous version ⊕ the new salts' rows, per bucket
+    schema = pa.schema([("term", pa.string()), ("df", pa.int64()),
+                        ("min_doc_id", pa.int64())])
+    dict_version = _next_dict_version(paths)
+    vocab = v_half = 0
+    for bucket in range(stats["n_buckets"]):
+        parts = []
+        prev = os.path.join(prev_dict, f"bucket={bucket}")
+        if os.path.isdir(prev):
+            parts.append(pq.read_table(prev, columns=schema.names))
+        for r in new:
+            salt = os.path.join(paths.postings, f"bucket={bucket}",
+                                f"salt={r['chunk']}")
+            if os.path.isdir(salt):
+                parts.append(pq.read_table(
+                    salt, columns=["term", "df_part", "min_doc_id"])
+                    .rename_columns(schema.names))
+        if not parts:
+            continue
+        agg = (pa.concat_tables([t.cast(schema) for t in parts])
+               .group_by("term")
+               .aggregate([("df", "sum"), ("min_doc_id", "min")]))
+        merged = pa.table([agg["term"], agg["df_sum"],
+                           agg["min_doc_id_min"]],
+                          schema=schema).sort_by("term")
+        vocab += merged.num_rows
+        v_half += int((merged["min_doc_id"].to_numpy() <= half).sum())
+        _write_part(os.path.join(paths.dictionary_version(dict_version),
+                                 f"bucket={bucket}"), merged)
+
+    return publish_snapshot(
+        paths, dict_version, working, n_docs=n_docs,
+        n_raw_tokens=n_raw_tokens, sum_dl=sum_dl, t_half=t_half,
+        vocab=vocab, v_half=v_half, n_buckets=stats["n_buckets"],
+        block_size=stats["block_size"], k1=stats["k1"], b=stats["b"],
+        stemmed=bool(stemmed_of(stats)))
 
 
 def index_web_pages_stream(spark: SparkSession, stream_df: DataFrame,

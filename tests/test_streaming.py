@@ -8,6 +8,8 @@ so we compare by url)."""
 
 from __future__ import annotations
 
+import itertools
+import math
 import os
 import shutil
 
@@ -19,8 +21,9 @@ from pyspark.sql import functions as F
 from rechercheinfoweb_spark.functions import codec
 from rechercheinfoweb_spark.functions.tokenizer import STOPWORDS
 from rechercheinfoweb_spark.operators.index_build import (
-    IndexPaths, build_index,
+    IndexPaths, build_index, finalize_index, read_registry,
 )
+from rechercheinfoweb_spark.operators.query_bool import boolean_search
 from rechercheinfoweb_spark.operators.query_vector import (
     IndexReader, vector_topk,
 )
@@ -347,6 +350,176 @@ def test_live_readers_pin_snapshot_across_append_and_refresh(
     # NOT leak into the new view
     assert after != before
     assert LocalSearcher(out).vector_query(q, "bm25", k=10) == after
+
+
+def test_refresh_of_appends_only_keeps_their_bucket_count(
+        spark, tmp_path_factory):
+    """The first refresh of a dir that only holds appends publishes
+    the bucket count the appends wrote, not refresh's default: a
+    wrong count routes every term lookup to the wrong bucket."""
+    pages = synthetic_web_pages(spark, 60)
+    out = str(tmp_path_factory.mktemp("appends_only_idx"))
+    inc.append_batch(spark, pages, out, n_buckets=8)
+    inc.refresh(spark, out)
+    stats, _ = _published(out)
+    assert stats["n_buckets"] == 8
+    ref = str(tmp_path_factory.mktemp("appends_only_ref"))
+    build_index(spark, pages, ref, n_chunks=1, n_buckets=8)
+    for word in ("engine", "ranking", "shuffle", "search"):
+        got = [r["doc_id"] for r in
+               boolean_search(spark, out, word).collect()]
+        assert got and got == [r["doc_id"] for r in
+                               boolean_search(spark, ref, word).collect()]
+
+
+def _snapshot_rows(out: str) -> tuple:
+    """Everything a refresh publishes, comparable with ``==``:
+    corpus_stats but its version (NaN as a string, so an undefined
+    Heaps fit compares equal), the registry snapshot and the
+    dictionary rows with their bucket."""
+    paths = IndexPaths(out)
+    stats = pq.read_table(paths.corpus_stats).to_pylist()[0]
+    version = stats.pop("dict_version")
+    stats = {k: "nan" if isinstance(v, float) and math.isnan(v) else v
+             for k, v in stats.items()}
+    return (stats, read_registry(paths.chunks_version(version)),
+            _rows(paths.dictionary_version(version), ("term",)))
+
+
+def test_delta_refresh_equals_full_finalize(spark, spark_work,
+                                            tmp_path_factory):
+    """Each refresh below runs as the delta (no Spark job) and
+    publishes what a full finalize of a copy of the same dir does:
+    corpus_stats (Heaps fit included), the registry snapshot and the
+    dictionary (term, df, min_doc_id, bucket) rows.  The sequence
+    moves the Heaps half-point inside old chunks, then into a new
+    chunk, and ends with a delta over the id holes of a purge."""
+    from rechercheinfoweb_spark.operators.compact import compact_chunks
+    from rechercheinfoweb_spark.operators.delete import delete_docs
+
+    pages = _url_sorted_pages(spark, 250)
+    out = str(tmp_path_factory.mktemp("delta_idx"))
+    copies = tmp_path_factory.mktemp("delta_full")
+    step = itertools.count()
+    build_index(spark, spark.createDataFrame(pages[:40], WEB_PAGES_SCHEMA),
+                out, n_chunks=2, n_buckets=8)
+
+    def append(lo, hi):
+        inc.append_batch(spark, spark.createDataFrame(
+            pages[lo:hi], WEB_PAGES_SCHEMA), out, batch_id=lo)
+
+    def refresh_both():
+        full = str(copies / f"full{next(step)}")
+        shutil.copytree(out, full)
+        _, jobs, _ = spark_work(lambda: inc.refresh(spark, out))
+        assert jobs == 0
+        finalize_index(spark, full, n_buckets=8)
+        assert _snapshot_rows(out) == _snapshot_rows(full)
+
+    for lo in (40, 55, 70):
+        append(lo, lo + 15)
+        refresh_both()
+    refresh_both()  # no new chunk
+    append(85, 235)  # larger than the index: half moves into it
+    refresh_both()
+    stats, _ = _published(out)
+    assert stats["n_docs"] // 2 > 85
+    delete_docs(spark, out, doc_ids=[3, 50, 90, 200])
+    compact_chunks(spark, out, target_docs=1000)
+    snap = read_registry(IndexPaths(out).chunks)
+    assert any(r["span"] > r["n_docs"] for r in snap)  # id holes
+    append(235, 250)
+    refresh_both()
+    assert _published(out)[0]["n_docs"] == 246
+
+
+def test_delta_refresh_reads_no_published_postings(spark, spark_work,
+                                                   tmp_path_factory):
+    """The delta never reads an already-published salt's postings:
+    with those files overwritten by garbage it still runs no Spark
+    job and publishes what a full finalize of an intact copy does."""
+    pages = _url_sorted_pages(spark, 100)
+    out = str(tmp_path_factory.mktemp("garbage_idx"))
+    build_index(spark, spark.createDataFrame(pages[:60], WEB_PAGES_SCHEMA),
+                out, n_chunks=2, n_buckets=8)
+    inc.append_batch(spark, spark.createDataFrame(pages[60:],
+                                                  WEB_PAGES_SCHEMA),
+                     out, batch_id=1)
+    full = str(tmp_path_factory.mktemp("garbage_ref"))
+    shutil.rmtree(full)
+    shutil.copytree(out, full)
+    finalize_index(spark, full, n_buckets=8)
+    postings = IndexPaths(out).postings
+    n_garbled = 0
+    for bdir in os.listdir(postings):
+        for salt in ("salt=0", "salt=1"):
+            sdir = os.path.join(postings, bdir, salt)
+            for f in os.listdir(sdir) if os.path.isdir(sdir) else ():
+                with open(os.path.join(sdir, f), "wb") as fh:
+                    fh.write(b"not a parquet file")
+                n_garbled += 1
+    assert n_garbled
+    info, jobs, tasks = spark_work(lambda: inc.refresh(spark, out))
+    assert (jobs, tasks) == (0, 0) and info["n_docs"] == 100
+    assert _snapshot_rows(out) == _snapshot_rows(full)
+
+
+def test_refresh_falls_back_to_full_finalize(spark, spark_work,
+                                             monkeypatch,
+                                             tmp_path_factory):
+    """A crashed compaction's registry, a dictionary without
+    ``min_doc_id`` and corpus_stats without ``t_half`` each take the
+    full finalize (Spark jobs), which writes the missing column; the
+    next refresh is a delta again."""
+    from rechercheinfoweb_spark.operators import compact
+
+    pages = _url_sorted_pages(spark, 120)
+    out = str(tmp_path_factory.mktemp("fallback_idx"))
+    paths = IndexPaths(out)
+    build_index(spark, spark.createDataFrame(pages[:80], WEB_PAGES_SCHEMA),
+                out, n_chunks=4, n_buckets=8)
+
+    def refresh_jobs():
+        return spark_work(lambda: inc.refresh(spark, out))[1]
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected failure: before compaction publish")
+
+    monkeypatch.setattr(compact, "finalize_index", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        compact.compact_chunks(spark, out, target_docs=80)
+    monkeypatch.undo()
+    assert refresh_jobs() > 0
+    assert _published(out)[0]["n_chunks"] == 1
+    assert refresh_jobs() == 0
+
+    # a dictionary written before the min_doc_id column
+    stats, _ = _published(out)
+    dict_dir = paths.dictionary_version(stats["dict_version"])
+    for bdir in os.listdir(dict_dir):
+        if bdir.startswith("bucket="):
+            for f in os.listdir(os.path.join(dict_dir, bdir)):
+                if f.endswith(".parquet"):
+                    path = os.path.join(dict_dir, bdir, f)
+                    pq.write_table(pq.read_table(path)
+                                   .drop_columns(["min_doc_id"]), path)
+    inc.append_batch(spark, spark.createDataFrame(
+        pages[80:100], WEB_PAGES_SCHEMA), out, batch_id=1)
+    assert refresh_jobs() > 0
+    stats, _ = _published(out)
+    assert "min_doc_id" in ds.dataset(
+        paths.dictionary_version(stats["dict_version"])).schema.names
+    inc.append_batch(spark, spark.createDataFrame(
+        pages[100:], WEB_PAGES_SCHEMA), out, batch_id=2)
+    assert refresh_jobs() == 0
+
+    # corpus_stats written before the t_half column
+    table = pq.read_table(paths.corpus_stats)
+    pq.write_table(table.drop_columns(["t_half"]), paths.corpus_stats)
+    assert refresh_jobs() > 0
+    assert _published(out)[0]["t_half"] == table["t_half"][0].as_py()
+    assert refresh_jobs() == 0
+    assert _published(out)[0]["n_docs"] == 120
 
 
 @pytest.fixture(scope="module")
