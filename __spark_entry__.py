@@ -11,17 +11,14 @@ Q3-Q5, ranked scoring Q7-Q9, BM25, corpus stats A7, doc-id
 assignment A6) plus the training-data-pipeline operators (dedup
 exact/minhash-LSH/n-gram-Jaccard/simhash, LSH→exact-Jaccard verify,
 near-dup connected components, the four-stage cleaning pipeline,
-winnowing rolling-hash fingerprints + overlap pairs, ANN cosine/
-LSH/IVF, language ID, quality, token counts, fingerprints, event
-rollups/sessionization) with ANSI-SQL DuckDB oracles.  SQL-parity queries use the SQL-portable tokenizer (split
-on non-alphanumeric) — the engine's stemmed tokenizer cannot run in
-DuckDB; the stemmed path is oracle-checked in pytest instead
-(tests/test_query_vector.py, rank-identical vs oracle/pyoracle.py).
-Hyperplane-LSH queries ARE oracled: the seeded numpy planes are
-emitted as SQL literal arrays and DuckDB recomputes the sign-bit
-buckets with list_dot_product (float64 both sides; a sign flip
-would need |dot| ≲ 1e-13 of zero — vanishing for random normals).
-Only the full engine index (Porter2 stemming) stays rows-only.
+winnowing rolling-hash fingerprints + overlap pairs, language ID,
+quality, token counts, fingerprints, link-graph degrees/PageRank)
+with ANSI-SQL DuckDB oracles.  SQL-parity queries use the
+SQL-portable tokenizer (split on non-alphanumeric) — the engine's
+stemmed tokenizer cannot run in DuckDB; the stemmed path is
+oracle-checked in pytest instead (tests/test_query_vector.py,
+rank-identical vs oracle/pyoracle.py).  Only the full engine index
+(Porter2 stemming) stays rows-only.
 
 Column-name discipline: every computed column is aliased
 identically in the Spark plan and the SQL text; floats that cross
@@ -37,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from rechercheinfoweb_spark.operators import (
-    dedup, pipeline, similarity, textstats,
+    dedup, pipeline, textstats,
 )
 from rechercheinfoweb_spark.operators.textstats import (
     LANG_MARKERS, PII_EMAIL_RE, PII_IPV4_RE, PII_PHONE_RE,
@@ -58,10 +55,6 @@ JACCARD_DF_CAP = 3
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1049,97 +1042,6 @@ _SQL_CCOMP = """
                   FROM reach GROUP BY doc_id)"""
 
 
-EMB_DIM = 64  # embeddings.parquet shape at every test SF (TESTDATA.md)
-
-
-def _sql_planes(n_planes: int, n_tables: int, seed: int = 7,
-                dim: int = EMB_DIM) -> str:
-    """The seeded hyperplanes (similarity._hyperplanes) as a DuckDB
-    VALUES relation (table_id, plane_id, p DOUBLE[]).  repr(float)
-    is shortest-round-trip, so DuckDB parses the exact float64."""
-    planes = similarity._hyperplanes(dim, n_planes, n_tables, seed)
-    rows = []
-    for t in range(n_tables):
-        for j in range(n_planes):
-            vec = ", ".join(repr(float(x)) for x in planes[t, j])
-            rows.append(f"({t}, {j}, [{vec}]::DOUBLE[])")
-    return ("planes(table_id, plane_id, p) AS (VALUES\n            "
-            + ",\n            ".join(rows) + ")")
-
-
-def _sql_lsh_sig(source_cte: str) -> str:
-    """sig CTE: per (vector, table) sign-bit bucket — the SQL twin of
-    similarity._signature_kernel's (V @ proj) >= 0 bucketing."""
-    return f"""sig AS (
-              SELECT {source_cte}.vec_id, pl.table_id,
-                     sum(CASE WHEN list_dot_product({source_cte}.v, pl.p)
-                              >= 0
-                         THEN 1 << pl.plane_id ELSE 0 END) AS bucket
-              FROM {source_cte} CROSS JOIN planes pl
-              GROUP BY {source_cte}.vec_id, pl.table_id)"""
-
-
-def _sql_ann_probe(n_planes: int = 8, n_tables: int = 4,
-                   seed: int = 7, k: int = 20) -> str:
-    """Oracle for BOTH ann_lsh_topk and ann_index_topk (the
-    materialized index probes the same (planes, seed) geometry):
-    query buckets = vec_id 0's signature row, candidates = vectors
-    sharing any (table, bucket), exact cosine re-rank."""
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                   FROM embeddings),
-            {_sql_planes(n_planes, n_tables, seed)},
-            {_sql_lsh_sig('e')},
-            qsig AS (SELECT table_id, bucket FROM sig WHERE vec_id = 0),
-            cand AS (SELECT DISTINCT s.vec_id FROM sig s
-                     JOIN qsig q ON s.table_id = q.table_id
-                                AND s.bucket = q.bucket),
-            q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-            qn AS (SELECT sqrt(list_dot_product(qv, qv)) AS nq FROM q)
-        SELECT e.vec_id,
-               round(list_dot_product(e.v, q.qv)
-                     / (greatest(sqrt(list_dot_product(e.v, e.v)),
-                                 1e-12) * qn.nq), 6) AS cosine
-        FROM e JOIN cand USING (vec_id), q, qn
-        ORDER BY cosine DESC, vec_id ASC LIMIT {k}"""
-
-
-def _sql_embed_lsh_pairs(threshold: float = 0.15, n_planes: int = 6,
-                         n_tables: int = 8, seed: int = 7) -> str:
-    """Oracle for dd_embed_near_pairs_lsh: candidate pairs share an
-    LSH bucket in some table, then the exact rounded-cosine filter."""
-    cos = ("round(list_dot_product(ea.v, eb.v)"
-           " / (greatest(sqrt(list_dot_product(ea.v, ea.v)), 1e-12)"
-           " * greatest(sqrt(list_dot_product(eb.v, eb.v)), 1e-12)), 6)")
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                   FROM embeddings WHERE vec_id < {PAIR_DOC_LIMIT}),
-            {_sql_planes(n_planes, n_tables, seed)},
-            {_sql_lsh_sig('e')},
-            cand AS (SELECT DISTINCT a.vec_id AS id_a,
-                            b.vec_id AS id_b
-                     FROM sig a JOIN sig b
-                       ON a.table_id = b.table_id
-                      AND a.bucket = b.bucket
-                     WHERE a.vec_id < b.vec_id)
-        SELECT id_a, id_b, {cos} AS cosine
-        FROM cand JOIN e ea ON ea.vec_id = id_a
-                  JOIN e eb ON eb.vec_id = id_b
-        WHERE {cos} >= {threshold}"""
-
-
-def _q_ann_cosine(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.cosine_topk(emb, [float(x) for x in qv], k=20)
-
-
-def _q_ann_lsh(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.lsh_ann_topk(emb, [float(x) for x in qv], k=20)
-
-
 def _content_key(src: str) -> str:
     """Fingerprint of a parquet source (path + file sizes + mtimes):
     cache keys derived from it go stale the moment the data at that
@@ -1152,261 +1054,6 @@ def _content_key(src: str) -> str:
             st = os.stat(os.path.join(root, f))
             stat_parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
     return hashlib.md5("|".join(stat_parts).encode()).hexdigest()[:12]
-
-
-def _q_ann_index(spark, sf_dir):
-    """Materialized ANN index path: build once per embeddings
-    CONTENT (bucket-partitioned vectors), probe via partition-pruned
-    read."""
-    import tempfile
-    key = _content_key(f"{sf_dir}/embeddings.parquet")
-    out = os.path.join(tempfile.gettempdir(), f"riw_ann_{key}")
-    emb = _emb(spark, sf_dir)
-    if not os.path.exists(os.path.join(out, "ann_meta.json")):
-        similarity.build_ann_index(spark, emb, out)
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.ann_index_topk(spark, out,
-                                     [float(x) for x in qv], k=20)
-
-
-PQ_M = 8           # 8 sub-codes over dim 64
-PQ_CODES = 16
-PQ_SEED = 13
-
-
-def _q_ann_pq(spark, sf_dir):
-    """Product-quantization path: vectors encoded once to m sub-codes
-    (32x smaller than float32), top-k by ADC over a literal lookup
-    table (pure Catalyst scan).  The contract pins the seeded
-    codebooks so the oracle can re-derive encoding AND scores."""
-    import tempfile
-    key = _content_key(f"{sf_dir}/embeddings.parquet")
-    out = os.path.join(tempfile.gettempdir(), f"riw_pq_{key}")
-    emb = _emb(spark, sf_dir)
-    dim = len(emb.select("embedding").first()[0])
-    books = similarity.pq_codebooks(dim, PQ_M, PQ_CODES, PQ_SEED)
-    if not os.path.exists(os.path.join(out, "pq_meta.json")):
-        similarity.build_pq_index(spark, emb, out, books=books)
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.pq_index_topk(spark, out,
-                                    [float(x) for x in qv], k=20)
-
-
-def _sql_pq_topk(dim: int = 64, k: int = 20) -> str:
-    """Oracle for ann_pq_topk: the ENTIRE PQ pipeline re-derived
-    relationally — seeded codebooks as literals, per-subspace
-    rounded-L2 assignment (row_number = the kernel's first-min tie
-    rule), ADC lookup-table sum."""
-    books = similarity.pq_codebooks(dim, PQ_M, PQ_CODES, PQ_SEED)
-    dsub = dim // PQ_M
-    rows = []
-    for s in range(PQ_M):
-        for j in range(PQ_CODES):
-            vec = ", ".join(repr(float(x)) for x in books[s, j])
-            rows.append(f"({s}, {j}, [{vec}]::DOUBLE[])")
-    books_cte = ("books(s, j, c) AS (VALUES\n            "
-                 + ",\n            ".join(rows) + ")")
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                   FROM embeddings),
-        en AS (SELECT vec_id,
-                      list_transform(v, x -> x
-                          / greatest(sqrt(list_dot_product(v, v)),
-                                     1e-12)) AS v
-               FROM e),
-        {books_cte},
-        q AS (SELECT v AS qv FROM en WHERE vec_id = 0),
-        lut AS (SELECT s, j,
-                       round(list_dot_product(
-                           list_slice(q.qv, s*{dsub}+1, s*{dsub}+{dsub}),
-                           c), 6) AS val
-                FROM books, q),
-        dists AS (
-          SELECT en.vec_id, b.s, b.j,
-                 round(list_dot_product(vs.vs, vs.vs)
-                       - 2 * list_dot_product(vs.vs, b.c)
-                       + list_dot_product(b.c, b.c), 6) AS d
-          FROM en CROSS JOIN books b,
-               LATERAL (SELECT list_slice(en.v, b.s*{dsub}+1,
-                                          b.s*{dsub}+{dsub}) AS vs)
-                   vs),
-        assign AS (
-          SELECT vec_id, s, j FROM (
-            SELECT vec_id, s, j,
-                   row_number() OVER (PARTITION BY vec_id, s
-                                      ORDER BY d ASC, j ASC) AS rn
-            FROM dists) WHERE rn = 1),
-        scores AS (
-          SELECT a.vec_id, round(sum(l.val), 6) AS adc_score
-          FROM assign a JOIN lut l ON a.s = l.s AND a.j = l.j
-          GROUP BY a.vec_id)
-        SELECT vec_id, adc_score FROM scores
-        ORDER BY adc_score DESC, vec_id ASC LIMIT {k}"""
-
-
-IVF_N_LISTS = 32   # ≈16 vectors/list at sf0.01
-IVF_N_PROBE = 8
-IVF_SEED = 11
-
-
-def _q_ann_ivfpq(spark, sf_dir):
-    """IVFADC composition: coarse seeded-anchor lists + PQ sub-codes
-    built in one pass, probe = n_probe list dirs of an ADC-only scan
-    (raw vectors never read at query time)."""
-    import tempfile
-    key = _content_key(f"{sf_dir}/embeddings.parquet")
-    out = os.path.join(tempfile.gettempdir(), f"riw_ivfpq_{key}")
-    emb = _emb(spark, sf_dir)
-    dim = len(emb.select("embedding").first()[0])
-    if not os.path.exists(os.path.join(out, "ivfpq_meta.json")):
-        similarity.build_ivfpq_index(
-            spark, emb, out,
-            centroids=similarity.seeded_anchors(dim, IVF_N_LISTS,
-                                                IVF_SEED),
-            books=similarity.pq_codebooks(dim, PQ_M, PQ_CODES,
-                                          PQ_SEED))
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.ivfpq_topk(spark, out, [float(x) for x in qv],
-                                 k=20, n_probe=IVF_N_PROBE)
-
-
-def _sql_ivfpq_topk(dim: int = 64, k: int = 20) -> str:
-    """Oracle for ann_ivfpq_topk: IVF assignment + probe-list CTEs
-    (the _sql_ivf_topk rules) composed with the PQ encode + ADC CTEs
-    (the _sql_pq_topk rules), candidates restricted to probed
-    lists."""
-    anchors = similarity.seeded_anchors(dim, IVF_N_LISTS, IVF_SEED)
-    crows = []
-    for i, c in enumerate(anchors):
-        vec = ", ".join(repr(float(x)) for x in c)
-        crows.append(f"({i}, [{vec}]::DOUBLE[])")
-    cent = ("cent(list_id, c) AS (VALUES\n            "
-            + ",\n            ".join(crows) + ")")
-    books = similarity.pq_codebooks(dim, PQ_M, PQ_CODES, PQ_SEED)
-    dsub = dim // PQ_M
-    brows = []
-    for s in range(PQ_M):
-        for j in range(PQ_CODES):
-            vec = ", ".join(repr(float(x)) for x in books[s, j])
-            brows.append(f"({s}, {j}, [{vec}]::DOUBLE[])")
-    books_cte = ("books(s, j, c) AS (VALUES\n            "
-                 + ",\n            ".join(brows) + ")")
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                   FROM embeddings),
-        {cent},
-        coarse AS (
-          SELECT vec_id, list_id FROM (
-            SELECT e.vec_id, cent.list_id,
-                   row_number() OVER (PARTITION BY e.vec_id
-                     ORDER BY round(list_dot_product(e.v, cent.c),
-                                    6) DESC,
-                              cent.list_id ASC) AS rn
-            FROM e CROSS JOIN cent) t
-          WHERE rn = 1),
-        qraw AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-        probe AS (SELECT cent.list_id FROM cent, qraw
-                  ORDER BY round(list_dot_product(qraw.qv, cent.c),
-                                 6) DESC,
-                           cent.list_id ASC
-                  LIMIT {IVF_N_PROBE}),
-        en AS (SELECT vec_id,
-                      list_transform(v, x -> x
-                          / greatest(sqrt(list_dot_product(v, v)),
-                                     1e-12)) AS v
-               FROM e),
-        {books_cte},
-        q AS (SELECT v AS qv FROM en WHERE vec_id = 0),
-        lut AS (SELECT s, j,
-                       round(list_dot_product(
-                           list_slice(q.qv, s*{dsub}+1, s*{dsub}+{dsub}),
-                           c), 6) AS val
-                FROM books, q),
-        cand AS (SELECT en.vec_id, en.v FROM en
-                 JOIN coarse USING (vec_id)
-                 WHERE coarse.list_id IN (SELECT list_id FROM probe)),
-        dists AS (
-          SELECT cand.vec_id, b.s, b.j,
-                 round(list_dot_product(vs.vs, vs.vs)
-                       - 2 * list_dot_product(vs.vs, b.c)
-                       + list_dot_product(b.c, b.c), 6) AS d
-          FROM cand CROSS JOIN books b,
-               LATERAL (SELECT list_slice(cand.v, b.s*{dsub}+1,
-                                          b.s*{dsub}+{dsub}) AS vs)
-                   vs),
-        assign AS (
-          SELECT vec_id, s, j FROM (
-            SELECT vec_id, s, j,
-                   row_number() OVER (PARTITION BY vec_id, s
-                                      ORDER BY d ASC, j ASC) AS rn
-            FROM dists) WHERE rn = 1),
-        scores AS (
-          SELECT a.vec_id, round(sum(l.val), 6) AS adc_score
-          FROM assign a JOIN lut l ON a.s = l.s AND a.j = l.j
-          GROUP BY a.vec_id)
-        SELECT vec_id, adc_score FROM scores
-        ORDER BY adc_score DESC, vec_id ASC LIMIT {k}"""
-
-
-def _q_ann_ivf(spark, sf_dir):
-    """IVF ANN path: vectors partitioned into Voronoi lists, query
-    probes the n_probe nearest lists by explicit path.  The contract
-    pins the seeded-ANCHOR quantizer (data-independent centroids →
-    the oracle recomputes assignment/probing from the same literals);
-    k-means training is the production default and is pinned by
-    tests/test_similarity.py instead."""
-    import tempfile
-    key = _content_key(f"{sf_dir}/embeddings.parquet")
-    out = os.path.join(tempfile.gettempdir(), f"riw_ivf_{key}")
-    emb = _emb(spark, sf_dir)
-    anchors = similarity.seeded_anchors(EMB_DIM, IVF_N_LISTS, IVF_SEED)
-    if not os.path.exists(os.path.join(out, "ivf_meta.json")):
-        similarity.build_ivf_index(spark, emb, out, centroids=anchors)
-    qv = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    return similarity.ivf_topk(spark, out, [float(x) for x in qv],
-                               k=20, n_probe=IVF_N_PROBE)
-
-
-def _sql_ivf_topk(k: int = 20) -> str:
-    """Oracle for ann_ivf_topk: the same seeded anchors as SQL
-    literals; assignment = rounded-dot argmax (row_number, list_id
-    tie-break) exactly as similarity._ivf_assign_kernel; probe = the
-    n_probe best lists for the query by the same rule
-    (similarity.ivf_probe_lists); exact cosine re-rank."""
-    anchors = similarity.seeded_anchors(EMB_DIM, IVF_N_LISTS, IVF_SEED)
-    rows = []
-    for i, c in enumerate(anchors):
-        vec = ", ".join(repr(float(x)) for x in c)
-        rows.append(f"({i}, [{vec}]::DOUBLE[])")
-    cent = ("cent(list_id, c) AS (VALUES\n            "
-            + ",\n            ".join(rows) + ")")
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                   FROM embeddings),
-            {cent},
-            assign AS (
-              SELECT vec_id, list_id FROM (
-                SELECT e.vec_id, cent.list_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY round(list_dot_product(e.v, cent.c),
-                                        6) DESC,
-                                  cent.list_id ASC) AS rn
-                FROM e CROSS JOIN cent) t
-              WHERE rn = 1),
-            q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
-            probe AS (SELECT cent.list_id FROM cent, q
-                      ORDER BY round(list_dot_product(q.qv, cent.c),
-                                     6) DESC,
-                               cent.list_id ASC
-                      LIMIT {IVF_N_PROBE}),
-            qn AS (SELECT sqrt(list_dot_product(qv, qv)) AS nq FROM q)
-        SELECT e.vec_id,
-               round(list_dot_product(e.v, q.qv)
-                     / (greatest(sqrt(list_dot_product(e.v, e.v)),
-                                 1e-12) * qn.nq), 6) AS cosine
-        FROM e JOIN assign USING (vec_id), q, qn
-        WHERE assign.list_id IN (SELECT list_id FROM probe)
-        ORDER BY cosine DESC, vec_id ASC LIMIT {k}"""
 
 
 def _sql_engine_bm25_nostem(k: int = 20, deleted: str | None = None,
@@ -1470,96 +1117,6 @@ def _sql_engine_bm25_nostem(k: int = 20, deleted: str | None = None,
         WHERE tf.term IN ('data','query','stream') {result_filter}
         GROUP BY tf.doc_id
         ORDER BY score DESC, doc_id ASC LIMIT {k}"""
-
-
-def _q_embed_near_pairs(spark, sf_dir):
-    emb = _emb(spark, sf_dir).where(F.col("vec_id") < PAIR_DOC_LIMIT)
-    return similarity.embedding_near_dup_pairs(emb, threshold=0.15)
-
-
-def _q_embed_near_pairs_lsh(spark, sf_dir):
-    emb = _emb(spark, sf_dir).where(F.col("vec_id") < PAIR_DOC_LIMIT)
-    return similarity.embedding_near_dup_pairs_lsh(emb, threshold=0.15)
-
-
-SEM_N_LISTS = 32
-SEM_SEED = 11
-
-
-def _q_semantic_pairs(spark, sf_dir):
-    """SemDedup (cluster-scoped semantic near-dup) over the FULL
-    embeddings table — no PAIR_DOC_LIMIT needed: the centroid
-    quantizer bounds pair work to Σ cluster², the whole point of the
-    scheme.  Seeded anchors so the oracle can recompute assignment
-    from literals (the IVF-contract trick)."""
-    return similarity.semantic_dedup_pairs(
-        _emb(spark, sf_dir), threshold=0.15,
-        n_lists=SEM_N_LISTS, seed=SEM_SEED)
-
-
-def _sql_semantic_pairs() -> str:
-    """Oracle for dd_semantic_pairs: the same seeded anchors as SQL
-    literals; assignment = rounded-RAW-dot argmax (row_number,
-    list_id tie-break) exactly as similarity._ivf_assign_kernel;
-    pairs joined within list only; cosine = dot-then-divide at 6dp,
-    the same float-op shape as the cluster kernel."""
-    anchors = similarity.seeded_anchors(EMB_DIM, SEM_N_LISTS, SEM_SEED)
-    rows = []
-    for i, c in enumerate(anchors):
-        vec = ", ".join(repr(float(x)) for x in c)
-        rows.append(f"({i}, [{vec}]::DOUBLE[])")
-    cent = ("cent(list_id, c) AS (VALUES\n            "
-            + ",\n            ".join(rows) + ")")
-    cos = """round(list_dot_product(a.v, b.v)
-                   / (greatest(sqrt(list_dot_product(a.v, a.v)), 1e-12)
-                      * greatest(sqrt(list_dot_product(b.v, b.v)),
-                                 1e-12)), 6)"""
-    return f"""
-        WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                   FROM embeddings),
-            {cent},
-            assign AS (
-              SELECT vec_id, list_id FROM (
-                SELECT e.vec_id, cent.list_id,
-                       row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY round(list_dot_product(e.v, cent.c),
-                                        6) DESC,
-                                  cent.list_id ASC) AS rn
-                FROM e CROSS JOIN cent) t
-              WHERE rn = 1),
-            ea AS (SELECT e.vec_id, e.v, assign.list_id
-                   FROM e JOIN assign USING (vec_id))
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine
-        FROM ea a JOIN ea b
-          ON a.list_id = b.list_id AND a.vec_id < b.vec_id
-        WHERE {cos} >= 0.15"""
-
-
-def _q_events_hourly(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    return (ev.groupBy(
-                F.date_format(F.date_trunc("hour", "ts"),
-                              "yyyy-MM-dd HH:mm:ss").alias("hour"),
-                "event_type")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.sum("value"), 6).alias("sum_value"))
-            .orderBy("hour", "event_type"))
-
-
-def _q_sessionize(spark, sf_dir):
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # parquet ts is TIMESTAMP_NTZ: hop via timestamp (session tz is
-    # pinned to UTC) to reach epoch seconds, matching DuckDB epoch()
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    flagged = ev.withColumn(
-        "new_sess",
-        F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-    return (flagged.groupBy("user_id")
-            .agg(F.sum("new_sess").alias("n_sessions"),
-                 F.count("*").alias("n_events"))
-            .orderBy("user_id"))
 
 
 def _q_value_percentiles(spark, sf_dir):
@@ -2015,17 +1572,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pp_url_filter": _q_url_filter,
         "dd_jaccard_pairs": _q_jaccard_pairs,
         "ft_heaps_curve": _q_heaps_curve,
-        "ann_cosine_topk": _q_ann_cosine,
-        "ann_lsh_topk": _q_ann_lsh,
-        "ann_index_topk": _q_ann_index,
-        "ann_ivf_topk": _q_ann_ivf,
-        "ann_pq_topk": _q_ann_pq,
-        "ann_ivfpq_topk": _q_ann_ivfpq,
-        "dd_embed_near_pairs": _q_embed_near_pairs,
-        "dd_embed_near_pairs_lsh": _q_embed_near_pairs_lsh,
-        "dd_semantic_pairs": _q_semantic_pairs,
-        "ev_hourly": _q_events_hourly,
-        "ev_sessionize": _q_sessionize,
         "ev_pr_curve": _q_pr_curve,
         "ev_value_percentiles": _q_value_percentiles,
         "lg_degrees": _q_lg_degrees,
@@ -2557,12 +2103,6 @@ def oracle_sql() -> dict[str, str]:
                    md5(text) AS text_md5,
                    lang
             FROM documents ORDER BY url""",
-        "ann_lsh_topk": _sql_ann_probe(),
-        "ann_index_topk": _sql_ann_probe(),
-        "ann_ivf_topk": _sql_ivf_topk(),
-        "ann_pq_topk": _sql_pq_topk(),
-        "ann_ivfpq_topk": _sql_ivfpq_topk(),
-        "dd_embed_near_pairs_lsh": _sql_embed_lsh_pairs(),
         "dd_simhash": f"""
             WITH {_sql_simhash()}
             SELECT d.doc_id, coalesce(s.simhash, 0) AS simhash
@@ -3067,18 +2607,6 @@ def oracle_sql() -> dict[str, str]:
               FROM toks)
             SELECT doc_id, n_occ FROM hits WHERE n_occ > 0
             ORDER BY doc_id""",
-        "ann_cosine_topk": """
-            WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings
-                       WHERE vec_id = 0),
-                 qn AS (SELECT sqrt(list_dot_product(qv, qv)) AS nq FROM q)
-            SELECT e.vec_id,
-                   round(list_dot_product(e.embedding::DOUBLE[], q.qv)
-                         / (greatest(sqrt(list_dot_product(
-                              e.embedding::DOUBLE[],
-                              e.embedding::DOUBLE[])), 1e-12) * qn.nq), 6)
-                       AS cosine
-            FROM embeddings e, q, qn
-            ORDER BY cosine DESC, vec_id ASC LIMIT 20""",
         "ev_value_percentiles": """
             SELECT event_type,
                    round(quantile_cont(value, 0.5), 6) AS p50,
@@ -3101,28 +2629,6 @@ def oracle_sql() -> dict[str, str]:
                    (SELECT count(*) FROM term_min t
                     WHERE t.m <= g.prefix) AS vocabulary
             FROM grid g ORDER BY g.prefix""",
-        "dd_embed_near_pairs": f"""
-            WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                       FROM embeddings WHERE vec_id < {PAIR_DOC_LIMIT})
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_dot_product(a.v, b.v)
-                         / (greatest(sqrt(list_dot_product(a.v, a.v)),
-                                     1e-12)
-                            * greatest(sqrt(list_dot_product(b.v, b.v)),
-                                       1e-12)), 6) AS cosine
-            FROM e a JOIN e b ON a.vec_id < b.vec_id
-            WHERE round(list_dot_product(a.v, b.v)
-                        / (greatest(sqrt(list_dot_product(a.v, a.v)),
-                                    1e-12)
-                           * greatest(sqrt(list_dot_product(b.v, b.v)),
-                                      1e-12)), 6) >= 0.15""",
-        "dd_semantic_pairs": _sql_semantic_pairs(),
-        "ev_hourly": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
-                       AS hour,
-                   event_type, count(*) AS n,
-                   round(sum(value), 6) AS sum_value
-            FROM events GROUP BY 1, 2 ORDER BY hour, event_type""",
         "ev_pr_curve": f"""
             WITH tf AS ({_SQL_TF}),
                  n AS (SELECT count(*) AS n_docs FROM documents),
@@ -3164,20 +2670,6 @@ def oracle_sql() -> dict[str, str]:
                    round(cum_rel * 1.0 / nv.n_valid, 6) AS recall,
                    round(cum_rel * 1.0 / rank, 6) AS precision
             FROM ranked, nv WHERE rel = 1 ORDER BY rank""",
-        "ev_sessionize": """
-            WITH g AS (
-              SELECT user_id,
-                     CASE WHEN lag(epoch(ts)) OVER
-                              (PARTITION BY user_id
-                               ORDER BY ts, event_id) IS NULL
-                          OR epoch(ts) - lag(epoch(ts)) OVER
-                              (PARTITION BY user_id
-                               ORDER BY ts, event_id) > 1800
-                          THEN 1 ELSE 0 END AS new_sess
-              FROM events)
-            SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions,
-                   count(*) AS n_events
-            FROM g GROUP BY user_id ORDER BY user_id""",
         "lg_degrees": _sql_lg_degrees(),
         "lg_pagerank": _sql_lg_pagerank(),
         "ix_spell_suggest": _sql_spell_suggest(),

@@ -18,7 +18,6 @@ stack):
                 bits so both engines could reproduce it, but bit ops
                 are not cleanly portable to the oracle → rows-only
                 check).
-* embedding cosine near-dup — see operators/similarity.py.
 """
 
 from __future__ import annotations

@@ -52,9 +52,7 @@ from .index_build import (
     stemmed_of,
 )
 from .query_bool import _eval_ast_numpy, parse_boolean
-from .query_vector import _topk_select
-
-SCHEME_COL = {"raw": 0, "norm": 1, "half": 2, "bm25": 3}
+from .query_vector import SCHEME_COL, _topk_select
 
 #: Largest serving shard that keeps the dense per-process scratch
 #: (two n_docs-sized arrays, ~9 bytes/doc → ~256 MB at the cap).
@@ -102,9 +100,15 @@ class LocalSearcher:
         self._id_cap = max(
             (r["min_id"] + r.get("span", r["n_docs"])
              for r in registry_rows), default=self.n_docs + 1)
-        # tombstones (logical deletes): masked out of every result
-        from .delete import read_tombstones
-        self._dead = read_tombstones(index_dir)
+        # tombstones (logical deletes): masked out of every result.
+        # Only those inside this snapshot's chunk ranges, the rule
+        # IndexReader applies: a delete may name ids of an append not
+        # yet refreshed, which lie beyond this searcher's id capacity.
+        from .delete import dead_by_salt, read_tombstones
+        self._dead = np.concatenate([
+            np.zeros(0, dtype=np.int64),
+            *dead_by_salt(read_tombstones(index_dir),
+                          registry_rows).values()])
         self._max_cached = max_cached_buckets
         self._buckets: OrderedDict[int, dict] = OrderedDict()
         self._dfs: OrderedDict[int, dict] = OrderedDict()

@@ -11,9 +11,9 @@ property.  scaling_run.py already alternates legs so each pair
 shares one phase; this wrapper adds the missing piece: it WAITS for
 a healthy window before starting, and stamps the host canary
 (first-touch fault bandwidth + single-thread tokenize rate, the
-same probes bench.py records) before and after the pair.  A pair
-counts only if both stamps are healthy — otherwise it re-arms and
-waits for the next window.
+probes scaling_run.py records with each run) before and after the
+pair.  A pair counts only if both stamps are healthy — otherwise
+it re-arms and waits for the next window.
 
 Usage:
   python scripts/canary_gated_scaling.py \
@@ -36,12 +36,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "scripts"))
+from scaling_run import host_canary  # noqa: E402
 
 OUT = "/tmp/canary_gated_pairs.jsonl"
 
 
 def canary() -> dict:
-    from bench import host_canary
     c = host_canary()
     c.update(fault_scaling())
     return c

@@ -6,15 +6,14 @@ Why this exists: on a real cluster every executor runs inside a
 container whose cpuset CONFINES its JVM/GC/netty threads and its
 Python workers to that executor's cores.  `local-cluster[E,C,mem]`
 cannot express that — its executor JVMs all float over one shared
-taskset pin, and the quad-independence probe (quad_probe.py /
-coord_vs_quad.py) showed confinement is worth ~2x on the
-Python-kernel stages of this build on this host.  This runner
-reproduces the real thing with the pieces Spark ships: one
-standalone Master, N Worker JVMs each launched under its OWN
-`taskset -c` pin (executors and pyspark workers inherit the
-worker's affinity — exactly what a cgroup cpuset does), and a
-driver deliberately left unpinned (a real driver is its own node;
-identical treatment for both cluster sizes).
+taskset pin, and a quad-independence probe (BASELINE.md) showed
+confinement is worth ~2x on the Python-kernel stages of this build
+on this host.  This runner reproduces the real thing with the
+pieces Spark ships: one standalone Master, N Worker JVMs each
+launched under its OWN `taskset -c` pin (executors and pyspark
+workers inherit the worker's affinity — exactly what a cgroup cpuset
+does), and a driver deliberately left unpinned (a real driver is its
+own node; identical treatment for both cluster sizes).
 
 Usage:
   python scripts/confined_cluster_run.py [--workers 1,4]

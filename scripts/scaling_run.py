@@ -44,10 +44,59 @@ LOCAL_DIR = os.path.join(SHM, "spark_local")
 IX_DIR = os.path.join(SHM, "ix")
 
 
+def host_canary() -> dict:
+    """Two ~1 s probes of the HOST, not the engine, recorded with
+    each scaling summary so runs are comparable: a shared VM can
+    degrade over its lifetime (same-code index builds measured at
+    109 s and 916 s hours apart on one VM, while first-touch page
+    faults dropped to ~0.4 GB/s under khugepaged churn).  A run whose
+    canary is several-fold below another's explains its wall times."""
+    import numpy as np
+    t0 = time.time()
+    a = np.zeros(128 * 1024 * 1024 // 8, dtype=np.int64)
+    a[::512] = 1  # touch every 4 KiB page
+    fault_mb_s = round(128 / (time.time() - t0), 0)
+    from rechercheinfoweb_spark.functions.tokenizer import (
+        TOKEN_RE, make_index_token_mapper,
+    )
+    import random
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(20000)]
+    docs = [" ".join(rng.choices(vocab, k=2000)) for _ in range(60)]
+    mapped = make_index_token_mapper()
+    for d in docs[:10]:
+        mapped(TOKEN_RE.findall(d))
+    t0 = time.time()
+    ntok = 0
+    for d in docs:
+        raw = TOKEN_RE.findall(d)
+        mapped(raw)
+        ntok += len(raw)
+    return {"host_first_touch_mb_s": fault_mb_s,
+            "host_tokenize_ktok_s": round(ntok / (time.time() - t0)
+                                          / 1e3, 0),
+            "host_steal_pct": _steal_pct()}
+
+
+def _steal_pct(interval: float = 1.0) -> float:
+    """Hypervisor CPU-steal percentage over a 1 s window (seen on a
+    shared VM: 11% machine-wide steal + khugepaged at 50% of a core
+    while a pinned 8-core build sat 70% idle — fault-service
+    throttling the guest cannot see in user time)."""
+    def snap():
+        with open("/proc/stat") as f:
+            parts = f.readline().split()
+        vals = [int(x) for x in parts[1:]]
+        return sum(vals), vals[7] if len(vals) > 7 else 0
+    t1, s1 = snap()
+    time.sleep(interval)
+    t2, s2 = snap()
+    return round(100.0 * (s2 - s1) / max(1, t2 - t1), 1)
+
+
 def _pkg_zip() -> str:
     """Zip the engine package for --py-files-style shipping.
-    Per-pid path: concurrent children (interference probe) must not
-    write the same zip."""
+    Per-pid path: concurrent children must not write the same zip."""
     import zipfile
     path = f"/tmp/riw_pkg_{os.getpid()}.zip"
     with zipfile.ZipFile(path, "w") as z:
@@ -210,15 +259,12 @@ def main() -> int:
     ap.add_argument("--child-executors", type=int, default=None,
                     help=argparse.SUPPRESS)
     ap.add_argument("--corpus", default=None, help=argparse.SUPPRESS)
-    # distinct output dir per concurrent child (interference probe
-    # runs two independent jobs side by side)
-    ap.add_argument("--out-suffix", default="", help=argparse.SUPPRESS)
     args = ap.parse_args()
 
     if args.child is not None or args.child_executors is not None:
         cores = args.child or (args.child_executors * args.executor_cores)
         child(cores, args.corpus,
-              os.path.join(IX_DIR, f"{cores}{args.out_suffix}"),
+              os.path.join(IX_DIR, str(cores)),
               args.n_chunks,
               executors=args.child_executors,
               exec_cores=args.executor_cores)
@@ -309,7 +355,6 @@ def main() -> int:
                 f"x {args.executor_cores} cores)")
     else:
         unit = f"eff(N={lo['cores']} vs {hi['cores']} cores)"
-    from bench import host_canary
     summary = {
         "metric": "index_build_scaling_efficiency",
         "value": round(eff, 3),
@@ -319,7 +364,7 @@ def main() -> int:
         "all_runs": all_results,
         "n_docs": args.n_docs,
         "doc_tokens": args.doc_tokens,
-        # host health at measurement time (see bench.host_canary):
+        # host health at measurement time (see host_canary):
         # this VM's memory subsystem degrades over its lifetime, and
         # a low canary marks a run whose absolute numbers — and even
         # the N-vs-4N ratio, via fault-rate variance between legs —

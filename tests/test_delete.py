@@ -205,3 +205,42 @@ def test_append_after_purge_never_reuses_ids(spark, pages_df,
     appended = [r for r in reg if r["min_id"] > max_id_before]
     assert appended and min(r["min_id"] for r in appended) \
         == max_id_before + 1
+
+
+def test_local_searcher_skips_tombstones_beyond_its_snapshot(
+        spark, tmp_path_factory):
+    """Tombstones above the snapshot's last id (the urls of an append
+    not yet refreshed, or an id never assigned) belong to no chunk of
+    the snapshot: LocalSearcher drops them as IndexReader does, and
+    both answer alike before and after the refresh."""
+    from rechercheinfoweb_spark.streaming import incremental as inc
+    out = str(tmp_path_factory.mktemp("del_beyond"))
+    build_index(spark, synthetic_web_pages(spark, 60), out, n_chunks=2,
+                n_buckets=8)
+    batch = (synthetic_web_pages(spark, 20, seed=99)
+             .selectExpr("concat('new-', url) as url", "text", "lang"))
+    inc.append_batch(spark, batch, out, batch_id=1, n_buckets=8)
+    new_urls = [r["url"] for r in batch.collect()]
+    dl.delete_docs(spark, out, urls=new_urls)
+    id_cap = max(r["min_id"] + r["span"]
+                 for r in read_registry(IndexPaths(out).chunks))
+    info = dl.delete_docs(spark, out, doc_ids=[id_cap + 10])
+    assert info["n_total"] == len(new_urls) + 1
+
+    def same_as_spark():
+        local = LocalSearcher(out)
+        for q in ("search engine", QUERY):
+            got = local.vector_query(q, "bm25", k=10, with_urls=True)
+            want = vector_topk(spark, out, q, scheme="bm25", k=10,
+                               with_urls=True).collect()
+            assert got == [(r["doc_id"], r["score"], r["url"])
+                           for r in want]
+            assert got and not any(u.startswith("new-")
+                                   for _d, _s, u in got)
+        assert local.boolean_query(BOOL_QUERY) == sorted(
+            r["doc_id"] for r in boolean_search(spark, out,
+                                                BOOL_QUERY).collect())
+
+    same_as_spark()  # snapshot without the append
+    inc.refresh(spark, out, n_buckets=8)
+    same_as_spark()  # the append is live, its docs masked

@@ -12,7 +12,7 @@ import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents embeddings").split()
+          "events documents").split()
 
 
 @pytest.fixture(scope="module")

@@ -1,5 +1,5 @@
 """Pins for the round-3 robustness fixes (VERDICT r3 'what's wrong'
-items 2-5): RAM-derived driver-heap cap, content-fingerprinted ANN
+items 2-5): RAM-derived driver-heap cap, content-fingerprinted
 cache keys, index layout-version check, and CACM qid parsing."""
 
 from __future__ import annotations
@@ -36,12 +36,12 @@ def test_machine_ram_reads_proc_meminfo():
 
 
 def test_ann_cache_key_tracks_content(tmp_path):
-    """The harness's ANN index cache key is a CONTENT fingerprint:
-    rewriting the embeddings parquet (same path) must change the key,
+    """The contract's index cache key is a CONTENT fingerprint:
+    rewriting the documents parquet (same path) must change the key,
     so a regenerated table never probes a stale index."""
     import __spark_entry__ as entry
 
-    p = tmp_path / "embeddings.parquet"
+    p = tmp_path / "documents.parquet"
     p.write_bytes(b"v1-bytes")
     k1 = entry._content_key(str(p))
     os.utime(p, ns=(1, 1))

@@ -30,7 +30,6 @@ from rechercheinfoweb_spark.operators.query_vector import (
 from rechercheinfoweb_spark.sources.web_pages import (
     WEB_PAGES_SCHEMA, synthetic_web_pages,
 )
-from rechercheinfoweb_spark.streaming import events as sev
 from rechercheinfoweb_spark.streaming import incremental as inc
 
 N = 120
@@ -520,215 +519,3 @@ def test_refresh_falls_back_to_full_finalize(spark, spark_work,
     assert _published(out)[0]["t_half"] == table["t_half"][0].as_py()
     assert refresh_jobs() == 0
     assert _published(out)[0]["n_docs"] == 120
-
-
-@pytest.fixture(scope="module")
-def events_src(spark, tmp_path_factory):
-    src = str(tmp_path_factory.mktemp("events_src"))
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet") \
-        .where(F.col("user_id") < 12)
-    ev.orderBy("ts").coalesce(1).write.parquet(f"{src}/all")
-    return src, ev
-
-
-def test_windowed_event_counts_stream(spark, events_src):
-    src, ev = events_src
-    stream = (spark.readStream.schema(ev.schema).parquet(f"{src}/*/"))
-    out = sev.windowed_event_counts(stream, window="1 hour")
-    q = (out.writeStream.outputMode("append")
-         .format("memory").queryName("win_counts")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from win_counts")
-    # append-mode emits a window once the watermark (max_ts - 2h)
-    # passes its end — windows inside the final horizon stay open
-    import datetime as dt
-    batch = (ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-             .agg(F.count("*").alias("n")))
-    max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    horizon = max_ts - dt.timedelta(hours=4)  # 2h wm + 1h win + margin
-    want = {(r["w"]["start"], r["event_type"]): r["n"]
-            for r in batch.where(F.col("w.start") < F.lit(horizon))
-            .collect()}
-    have = {(r["window_start"], r["event_type"]): r["n"]
-            for r in got.collect()}
-    assert want, "horizon filter left nothing to compare"
-    for k, v in want.items():
-        assert have.get(k) == v, k
-    # and every emitted window must agree with the batch truth
-    full = {(r["w"]["start"], r["event_type"]): r["n"]
-            for r in batch.collect()}
-    for k, v in have.items():
-        assert full.get(k) == v, k
-
-
-def test_sessionize_stream(spark, events_src):
-    src, ev = events_src
-    stream = (spark.readStream.schema(ev.schema).parquet(f"{src}/*/"))
-    out = sev.sessionize_stream(stream.select("user_id", "ts"))
-    q = (out.writeStream.outputMode("append")
-         .format("memory").queryName("sessions")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql(
-        "select user_id, count(*) as n_sessions from sessions "
-        "where closed = 1 group by user_id")
-    have = {r["user_id"]: r["n_sessions"] for r in got.collect()}
-    # batch truth: sessions with a 30-min gap; the LAST session per
-    # user is still open in the stream (no timeout fires under
-    # availableNow), so closed-count = batch-count - 1 per user
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    from pyspark.sql.window import Window
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = epoch - F.lag(epoch).over(w)
-    batch = (ev.withColumn(
-        "new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .groupBy("user_id").agg(F.sum("new_sess").alias("n")))
-    for r in batch.collect():
-        assert have.get(r["user_id"], 0) == r["n"] - 1, r
-
-
-def test_streaming_clean_gate(spark, tmp_path_factory):
-    """streaming_clean == its batch twin on the same pages, and the
-    within-watermark exact-dedup state drops re-crawled duplicates
-    (first arrival wins)."""
-    from rechercheinfoweb_spark.streaming.cleaning import (
-        streaming_clean,
-    )
-
-    src = str(tmp_path_factory.mktemp("clean_src"))
-    pages = synthetic_web_pages(spark, 80).drop("html")
-    # inject exact duplicates: 10 pages re-crawled 5 min later under
-    # new urls (same text bytes => same md5 => must be dropped)
-    dups = (pages.orderBy("url").limit(10)
-            .withColumn("url", F.concat(F.lit("https://mirror.example/"),
-                                        F.col("url")))
-            .withColumn("warc_ts",
-                        F.col("warc_ts") + F.expr("INTERVAL 5 MINUTES")))
-    allp = pages.unionByName(dups)
-    pages.write.parquet(f"{src}/b0")
-    dups.write.parquet(f"{src}/b1")
-
-    stream = spark.readStream.schema(allp.schema).parquet(f"{src}/*/")
-    out = streaming_clean(stream, lang="en", min_quality=0.0,
-                          watermark="1 hour")
-    q = (out.writeStream.outputMode("append")
-         .format("memory").queryName("cleaned")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from cleaned").collect()
-
-    # CONTENT-level equality with the batch twin: which url survives
-    # a duplicate group is a tie-break the two paths resolve
-    # differently by design (streaming = first processed, batch =
-    # min warc_ts/url), so compare the surviving text set + stats
-    want = streaming_clean(allp, lang="en", min_quality=0.0).collect()
-    key = lambda r: (r["text"], r["lang_pred"], r["quality"])
-    assert sorted(map(key, got)) == sorted(map(key, want))
-    # every injected duplicate text must appear exactly once
-    got_texts = [r["text"] for r in got]
-    assert len(got_texts) == len(set(got_texts))
-    # each dup group's survivor is one of its two members
-    dup_urls = {r["url"] for r in dups.collect()}
-    orig_urls = {r["url"] for r in pages.collect()}
-    for r in got:
-        assert r["url"] in dup_urls | orig_urls
-
-
-def test_streaming_clean_with_c4_and_gopher_rules(
-        spark, tmp_path_factory):
-    """The C4 rewrite + Gopher gate compose into the streaming
-    ingest path (stateless stages stream as-is) and match the batch
-    twin at content level."""
-    from pyspark.sql import functions as F
-
-    from rechercheinfoweb_spark.operators import textstats
-    from rechercheinfoweb_spark.operators.pipeline import c4_clean
-    from rechercheinfoweb_spark.streaming.cleaning import (
-        streaming_clean,
-    )
-
-    src = str(tmp_path_factory.mktemp("c4g_src"))
-    pages = synthetic_web_pages(spark, 120).drop("html")
-    # synthetic text is single-line/unpunctuated: derive sentence
-    # structure + stopword mass so the gates have survivors AND
-    # casualties (same trick as the pp_c4_clean contract query)
-    t = F.replace(F.col("text"), F.lit(" search "), F.lit(".\n"))
-    t = F.replace(t, F.lit(" query "), F.lit(".\n"))
-    t = F.replace(t, F.lit(" WAND "), F.lit("…\n"))
-    t = F.concat(t, F.lit(
-        ". \nIt would have been good to be with all of that too."))
-    pages = pages.withColumn("text", t)
-    half = pages.randomSplit([0.5, 0.5], seed=7)
-    half[0].write.parquet(f"{src}/b0")
-    half[1].write.parquet(f"{src}/b1")
-
-    stream = spark.readStream.schema(pages.schema).parquet(f"{src}/*/")
-    out = streaming_clean(stream, lang="en", min_quality=0.0,
-                          c4_rules=True, gopher_rules=True)
-    q = (out.writeStream.outputMode("append")
-         .format("memory").queryName("c4g_cleaned")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from c4g_cleaned").collect()
-
-    want = streaming_clean(pages, lang="en", min_quality=0.0,
-                           c4_rules=True, gopher_rules=True).collect()
-    key = lambda r: (r["text"], r["lang_pred"], r["quality"])
-    assert sorted(map(key, got)) == sorted(map(key, want))
-    assert 0 < len(got) < pages.count()  # survivors AND casualties
-    # the admitted text IS the C4-rewritten text: independently
-    # recompute c4_clean -> gopher over the batch input
-    manual = (c4_clean(pages, id_cols=("url",))
-              .withColumnRenamed("text_clean", "text")
-              .where(textstats.gopher_keep_col()))
-    manual_texts = {r["text"] for r in manual.collect()}
-    assert {r["text"] for r in got} <= manual_texts
-
-
-def test_streaming_clean_with_url_and_badwords_gates(
-        spark, tmp_path_factory):
-    """The RefinedWeb URL gate + C4 bad-words rule compose into the
-    streaming ingest path (stateless map-side predicates) and match
-    the batch twin exactly — including which pages the URL rule
-    drops before any text expression runs."""
-    from pyspark.sql import functions as F
-
-    from rechercheinfoweb_spark.operators.pipeline import (
-        badwords_filter, url_filter,
-    )
-    from rechercheinfoweb_spark.streaming.cleaning import (
-        streaming_clean,
-    )
-
-    src = str(tmp_path_factory.mktemp("ubw_src"))
-    pages = synthetic_web_pages(spark, 100).drop("html")
-    blocked = [f"host{i}.example" for i in range(5)]   # ~5% of urls
-    badwords = ["shuffle"]                             # common token
-    half = pages.randomSplit([0.5, 0.5], seed=11)
-    half[0].write.parquet(f"{src}/b0")
-    half[1].write.parquet(f"{src}/b1")
-
-    stream = spark.readStream.schema(pages.schema).parquet(f"{src}/*/")
-    out = streaming_clean(stream, lang="en", min_quality=0.0,
-                          blocked_domains=blocked, badwords=badwords)
-    q = (out.writeStream.outputMode("append")
-         .format("memory").queryName("ubw_cleaned")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("select * from ubw_cleaned").collect()
-
-    want = streaming_clean(pages, lang="en", min_quality=0.0,
-                           blocked_domains=blocked,
-                           badwords=badwords).collect()
-    key = lambda r: (r["text"], r["lang_pred"], r["quality"])
-    assert sorted(map(key, got)) == sorted(map(key, want))
-    assert 0 < len(got) < pages.count()
-    # survivors are exactly the pages passing both standalone gates
-    # (plus the unchanged lang gate downstream)
-    manual = badwords_filter(
-        url_filter(pages, blocked), badwords)
-    manual_urls = {r["url"] for r in manual.collect()}
-    assert {r["url"] for r in got} <= manual_urls
-    blocked_urls = {r["url"] for r in pages.collect()} - manual_urls
-    assert not ({r["url"] for r in got} & blocked_urls)
