@@ -37,10 +37,11 @@ Scale shape: serving never touches Spark — any number of these
 processes can front the same parquet index artifact, each reading
 only the term buckets its queries hit (the Lucene/ES division of
 labor; see serve_local.py module doc).  A ``threading.Lock`` per
-searcher serializes kernel access because LocalSearcher's dense
-scratch and LRUs are deliberately single-threaded; run more
-processes, not more threads, to scale serving — they share the page
-cache over the same immutable files.
+searcher serializes searches because LocalSearcher's bucket,
+dictionary and decoded-postings LRUs are deliberately
+single-threaded (its scoring scratch is allocated per call); run
+more processes, not more threads, to scale serving — they share the
+page cache over the same immutable files.
 """
 
 from __future__ import annotations
@@ -122,6 +123,7 @@ class SearchApp:
         per request — only the served page is materialized; the
         count comes free from the scoring kernel's candidate set."""
         s = self.corpora[corpus]
+        offset = max(offset, 0)  # a bad offset serves the first page
         t0 = time.time()
         with self._locks[corpus]:
             if qtype == "boolean":
@@ -260,8 +262,8 @@ class SearchApp:
         out = {}
         for section in ("postings", "dictionary", "docs"):
             total = 0
-            for root, _, files in os.walk(os.path.join(s._dir,
-                                                       section)):
+            for root, _, files in os.walk(os.path.join(
+                    s.paths.out_dir, section)):
                 total += sum(os.path.getsize(os.path.join(root, f))
                              for f in files)
             out[section] = total
@@ -300,8 +302,9 @@ class SearchApp:
 
     def doc_page(self, corpus: str, doc_id: int) -> dict | None:
         s = self.corpora.get(corpus)
-        # doc ids are dense 1..N (web_pages.assign_doc_ids)
-        if s is None or not (0 < doc_id <= s.n_docs):
+        # the snapshot decides: ids keep their chunk ranges across
+        # purges, and a tombstoned doc is gone from every surface
+        if s is None or not s.is_live(doc_id):
             return None
         with self._locks[corpus]:
             url = s._load_urls()[doc_id]

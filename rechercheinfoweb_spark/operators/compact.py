@@ -176,9 +176,10 @@ def compact_chunks(spark: SparkSession, out_dir: str, *,
 
     Returns a summary dict; ``merged_groups == 0`` means the chunk
     layout was already within target (no-op, nothing written).
-    ``target_docs`` doubles as the per-shard memory bound the query
-    kernels rely on (dense arrays are O(chunk size)), so the default
-    matches the build's DOCS_PER_CHUNK.
+    ``target_docs`` doubles as the per-shard memory bound every
+    ranked path relies on — the Spark kernels and LocalSearcher score
+    one salt at a time with dense scratch sized by its id span — so
+    the default matches the build's DOCS_PER_CHUNK.
 
     ``keep_previous`` (default) retains the pre-compaction chunk dirs
     for readers opened before this run (they are pruned by the NEXT

@@ -8,6 +8,13 @@ full sort desc.  Duplicated query terms contribute twice
 we canonicalize with a (score desc, doc_id asc) tiebreak, and the
 oracle does the same (SURVEY.md §7 determinism).
 
+One snapshot, one scoring core: :class:`Snapshot` opens a published
+snapshot on the driver (corpus_stats, chunk registry, tombstones,
+dictionary df) for both :class:`IndexReader` (this module's Spark
+reader) and ``serve_local.LocalSearcher``, and :func:`score_shard`
+ranks one salt shard for the single-query kernel, the batch kernel
+and LocalSearcher alike.
+
 Spark formulation: ONE job with ONE stage and no shuffle per query.
 Term → bucket is a pure-Python twin of the build's xxhash64
 expression; each term's global df comes from the snapshot's
@@ -42,15 +49,16 @@ oracle and the build share — so scores are bit-equal to a
 precomputed-weight design while the index never stores a float
 plane.
 
-Block-max pruning (north rule): within a shard the kernel first
-builds per-doc score *upper bounds* from block metadata alone
+Block-max pruning (north rule, :func:`score_shard`): per-doc score
+*upper bounds* come from block metadata alone
 (``scoring.block_upper_bounds`` over max_tf/min_dl/max_ratio; ids
-decode only), establishes a threshold θ from the exact scores of the
-top-k docs by upper bound (a valid lower bound on the true kth
-score), then skips every block whose docs all fall below θ.  Results
-are exact — pruned docs are provably outside the top-k — so WAND-on
-and WAND-off return rank-identical lists, which
-``tests/test_query_vector.py`` pins.
+decode only), a threshold θ from the exact scores of the top-k docs
+by upper bound (a valid lower bound on the true kth score), then
+every block whose docs all fall below θ is skipped.  Results are
+exact — pruned docs are provably outside the top-k — so WAND-on and
+WAND-off return rank-identical lists, which
+``tests/test_query_vector.py`` pins.  Only :func:`vector_topk`
+prunes: the batch kernel and LocalSearcher score exhaustively.
 """
 
 from __future__ import annotations
@@ -58,7 +66,7 @@ from __future__ import annotations
 import math
 import os
 from collections import Counter, OrderedDict
-from functools import cached_property
+from functools import cached_property, partial
 
 import numpy as np
 import pyarrow as pa
@@ -69,6 +77,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from ..functions import codec, scoring
 from ..functions.tokenizer import STOPWORDS, vector_query_terms
 from ..functions.xxhash import spark_term_bucket
+from .delete import dead_by_salt, read_tombstones
 from .index_build import (
     IndexPaths, _stats_mtime, check_layout, dict_version_of,
     snapshot_registry, stemmed_of,
@@ -148,22 +157,22 @@ def _topk_select(cand: np.ndarray, scores: np.ndarray, k: int):
     return cand[order], scores[order]
 
 
-class IndexReader:
-    """Handle on a built index directory (one finalized snapshot).
+class Snapshot:
+    """One published index snapshot, opened on the driver with
+    pyarrow (no Spark job): the one opener :class:`IndexReader` and
+    :class:`~.serve_local.LocalSearcher` share.
 
     Chunks appended by the streaming path after the last
     ``finalize_index`` are invisible until the next refresh, and
     chunks merged away by compaction stay visible to readers that
     pinned them: corpus_stats references an immutable registry
-    snapshot (chunks.v{dict_version}), and the reader lists the
-    postings files of exactly that salt set once when it opens, so
-    queries never mix new postings with stale global statistics — or
-    see a doc range twice across a compaction.  Opening runs no Spark
-    job: stats, registry, tombstones and the file listing are read on
-    the driver."""
+    snapshot (chunks.v{dict_version}) and dictionary version, and a
+    snapshot reads exactly that salt set, so queries never mix new
+    postings with stale global statistics — or see a doc range twice
+    across a compaction."""
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 at_version: int | None = None):
+    def __init__(self, index_dir: str, at_version: int | None = None,
+                 max_cached_buckets: int = 64):
         """``at_version`` opens the index AT a retained snapshot
         (Iceberg time travel): the frozen ``corpus_stats.v{N}``
         record resolves that snapshot's dictionary, chunk registry
@@ -174,7 +183,6 @@ class IndexReader:
         the one NON-versioned input — deletes apply to historical
         reads too, deliberately (takedown/GDPR must reach every
         queryable snapshot)."""
-        self.spark = spark
         self.paths = IndexPaths(index_dir)
         stats_path = (self.paths.corpus_stats if at_version is None
                       else self.paths.corpus_stats_version(at_version))
@@ -184,9 +192,9 @@ class IndexReader:
                 f"snapshot v{at_version} is expired or was never "
                 f"published at {index_dir}; retained versions: "
                 f"{list_snapshots(index_dir) or 'none'}")
-        self._stats_path = stats_path
         stats = pq.read_table(stats_path).to_pylist()[0]
         check_layout(stats)
+        self.stats = stats  # full corpus_stats row (httpserver /stat)
         self.n_docs = stats["n_docs"]
         self.avgdl = stats["avgdl"]
         self.n_chunks = stats["n_chunks"]
@@ -196,65 +204,75 @@ class IndexReader:
         self.k1 = stats["k1"]
         self.b = stats["b"]
         self.stemmed = bool(stemmed_of(stats))
-        # chunk registry SNAPSHOT (driver-side file read, no Spark
-        # job): salt/chunk -> (first doc_id, chunk size); shard
-        # kernels map absolute ids to dense positions with it.  The
-        # snapshot is the authoritative chunk set — since compaction,
-        # membership (isin), not a `<= max_chunk` watermark, is what
-        # isolates this reader from appends AND from merged-away
-        # chunks awaiting pruning.
+        # chunk registry SNAPSHOT: salt/chunk -> (first doc_id, id
+        # span); shard scorers map absolute ids to dense positions
+        # with it.  Membership (not a `<= max_chunk` watermark) is
+        # what isolates a reader from appends AND from merged-away
+        # chunks awaiting pruning.  The span is the id-RANGE width —
+        # identical to n_docs until a delete purge punches holes
+        # (delete.py), so id capacity never comes from n_docs.
         registry_rows = snapshot_registry(self.paths, stats)
-        # (min_id, span): span is the id-RANGE width — identical to
-        # n_docs until a delete purge punches holes (delete.py)
         self.salt_map: dict[int, tuple[int, int]] = {
             r["chunk"]: (r["min_id"], r.get("span", r["n_docs"]))
             for r in registry_rows}
-        # tombstones (logical deletes): masked in every kernel; the
-        # per-salt split ships to tasks as ONE small broadcast
-        from .delete import dead_by_salt, read_tombstones
+        self._id_cap = max((base + span for base, span
+                            in self.salt_map.values()),
+                           default=self.n_docs + 1)
+        # tombstones (logical deletes), masked in every scorer; the
+        # per-salt split keeps only ids inside this snapshot's chunk
+        # ranges (a delete may name ids of an unrefreshed append)
         self.tombstones = read_tombstones(self.paths)
-        self._dead_bc = (
-            spark.sparkContext.broadcast(
-                dead_by_salt(self.tombstones, registry_rows))
-            if self.tombstones.size else None)
-        # the snapshot's postings files, listed ONCE here: later
-        # appends, purges and compactions cannot change what this
-        # reader scans
-        self._files = _list_postings(self.paths.postings, self.salt_map)
+        self.dead_by_salt = dead_by_salt(self.tombstones, registry_rows)
         self._dict_dir = self.paths.dictionary_version(
             dict_version_of(stats))
         self._dfs: OrderedDict[int, dict[str, int]] = OrderedDict()
-        self._max_cached_buckets = 64
+        self._max_cached = max_cached_buckets
         # worker-side decoded-postings cache token: changes whenever
         # corpus_stats is republished, so cached decodes can never
         # cross snapshots (even a rebuild at the same path)
         try:
-            mtime = _stats_mtime(self._stats_path)
+            mtime = _stats_mtime(stats_path)
         except OSError:
             mtime = None
         self.cache_token = ((index_dir, self.max_chunk, mtime)
                             if mtime is not None else None)
 
-    def _buckets_of(self, terms: list[str]) -> list[int]:
-        # driver-side xxhash64 twin of the build's bucket expression
-        return sorted({spark_term_bucket(t, self.n_buckets)
-                       for t in terms})
+    def is_live(self, doc_id: int) -> bool:
+        """True iff *doc_id* lies in one of the snapshot's chunk id
+        ranges and is not tombstoned."""
+        return (any(base <= doc_id < base + span
+                    for base, span in self.salt_map.values())
+                and not (self.tombstones == doc_id).any())
+
+    def _read_bucket(self, table_name: str, bucket: int,
+                     columns: list[str]) -> pa.Table | None:
+        """One bucket dir of the snapshot's ``dictionary`` or
+        ``postings`` table (postings filtered to the snapshot's
+        salts), or None when the bucket has no dir."""
+        root = (self._dict_dir if table_name == "dictionary"
+                else os.path.join(self.paths.out_dir, table_name))
+        path = os.path.join(root, f"bucket={bucket}")
+        if not os.path.isdir(path):
+            return None
+        return pq.read_table(
+            path, columns=columns,
+            filters=[("salt", "in", sorted(self.salt_map))]
+            if table_name == "postings" else None)
 
     def _bucket_dfs(self, bucket: int) -> dict[str, int]:
-        """term -> global df for one dictionary bucket, read on the
-        driver with pyarrow (LRU over buckets)."""
+        """term -> global df for one dictionary bucket (LRU over
+        buckets)."""
         hit = self._dfs.get(bucket)
         if hit is not None:
             self._dfs.move_to_end(bucket)
             return hit
-        path = os.path.join(self._dict_dir, f"bucket={bucket}")
         dfs: dict[str, int] = {}
-        if os.path.isdir(path):
-            t = pq.read_table(path, columns=["term", "df"])
+        t = self._read_bucket("dictionary", bucket, ["term", "df"])
+        if t is not None:
             dfs = dict(zip(t.column("term").to_pylist(),
                            t.column("df").to_pylist()))
         self._dfs[bucket] = dfs
-        if len(self._dfs) > self._max_cached_buckets:
+        if len(self._dfs) > self._max_cached:
             self._dfs.popitem(last=False)
         return dfs
 
@@ -278,6 +296,30 @@ class IndexReader:
         return {t: (float(m), float(scoring.idf(self.n_docs, dfs[t])),
                     float(scoring.bm25_idf(self.n_docs, dfs[t])))
                 for t, m in mult.items() if t in dfs}
+
+
+class IndexReader(Snapshot):
+    """Spark handle on one finalized snapshot (see :class:`Snapshot`).
+
+    Opening runs no Spark job: on top of the snapshot it lists the
+    postings files of exactly its salt set once, and ships the
+    per-salt tombstones to the shard kernels as ONE small broadcast."""
+
+    def __init__(self, spark: SparkSession, index_dir: str,
+                 at_version: int | None = None):
+        super().__init__(index_dir, at_version)
+        self.spark = spark
+        self._dead_bc = (spark.sparkContext.broadcast(self.dead_by_salt)
+                         if self.tombstones.size else None)
+        # the snapshot's postings files, listed ONCE here: later
+        # appends, purges and compactions cannot change what this
+        # reader scans
+        self._files = _list_postings(self.paths.postings, self.salt_map)
+
+    def _buckets_of(self, terms: list[str]) -> list[int]:
+        # driver-side xxhash64 twin of the build's bucket expression
+        return sorted({spark_term_bucket(t, self.n_buckets)
+                       for t in terms})
 
     @cached_property
     def _dictionary(self) -> DataFrame:
@@ -407,6 +449,100 @@ def _block_meta_ub(blocks, idf_v: float, bidf_v: float, wcol: int,
                                       avgdl, k1, b)[:, wcol]
 
 
+def _check_k(k: int) -> None:
+    """Reject a result size below 1 on the driver."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+
+
+def score_shard(terms: list, cap: int, dead: np.ndarray | None, k: int,
+                wcol: int, use_pruning: bool = False,
+                counters: dict | None = None):
+    """Top-k candidates of one salt shard — the scoring core of every
+    ranked path (the Spark single-query and batch kernels,
+    LocalSearcher).
+
+    ``terms`` lists the shard's query terms in sorted order as
+    ``(mult, blocks, weights, ubs)``: ``blocks`` are entries whose
+    ``[0]`` is the dense shard positions (``id - base``, unique within
+    a block), ``weights(block)`` returns the block's (n,4) weight
+    matrix (computed lazily and memoized by the caller), and ``ubs``
+    holds each block's score upper bound for the scheme (read only
+    when pruning).  ``cap`` bounds the positions; ``dead`` holds the
+    tombstoned positions.  Each doc takes its terms' contributions in
+    sorted-term order — the oracle's float-op order — so scores are
+    bit-equal on every path.
+
+    Block-max pruning (``use_pruning``): per-doc upper bounds from
+    block metadata alone, a threshold θ from the exact scores of the
+    top-k docs by upper bound (a valid lower bound on the true kth
+    score), then only blocks holding a doc at or above θ get exact
+    weights.  Dead docs are cleared before seeding, so they can
+    neither seed θ nor become candidates.  ``counters`` may carry
+    {'blocks_total', 'blocks_scored'} Spark accumulators —
+    blocks_scored counts blocks whose exact weights the final pass
+    needed, so (1 − scored/total) is the block-skip rate.
+
+    Returns (positions, scores, n_live): every doc that can rank in
+    the top-k (all live matching docs, or with pruning those at or
+    above θ) with its exact score, and the number of live docs
+    matching any term.  Callers pick the top-k with
+    :func:`_topk_select` — LocalSearcher once over all its salts."""
+    present = np.zeros(cap, dtype=bool)  # any-posting docs score even
+    # when idf=0 (df=N hot terms), like the reference merge
+    # one pass: exact scores, or per-doc upper bounds when pruning
+    acc = np.zeros(cap, dtype=np.float64)
+    n_blocks = 0
+    for m, blocks, weights, ubs in terms:
+        m = np.float64(m)
+        for i, e in enumerate(blocks):
+            present[e[0]] = True
+            acc[e[0]] += m * (ubs[i] if use_pruning
+                              else weights(e)[:, wcol])
+        n_blocks += len(blocks)
+    if dead is not None:
+        present[dead] = False
+    live = np.nonzero(present)[0]
+    if counters:
+        counters["blocks_total"].add(n_blocks)
+    if not use_pruning:
+        if counters:
+            counters["blocks_scored"].add(n_blocks)
+        return live, acc[live], int(live.size)
+
+    def add_exact(into: np.ndarray, mask: np.ndarray) -> int:
+        scored = 0
+        for m, blocks, weights, _u in terms:
+            m = np.float64(m)
+            for e in blocks:
+                sel = mask[e[0]]
+                if sel.any():
+                    np.add.at(into, e[0][sel], m * weights(e)[sel, wcol])
+                    scored += 1
+        return scored
+
+    # any k seeds give a valid θ (kth exact among k docs is ≤ the true
+    # kth score); highest-ub seeds give the tightest — argpartition
+    # finds them in O(m)
+    ub = acc
+    seeds = (live[np.argpartition(-ub[live], k - 1)[:k]]
+             if live.size > k else live)
+    mask = np.zeros(cap, dtype=bool)
+    mask[seeds] = True
+    exact = np.zeros(cap, dtype=np.float64)
+    add_exact(exact, mask)
+    seed_scores = exact[seeds]
+    theta = (np.sort(seed_scores)[-k] if seed_scores.size >= k
+             else -np.inf)
+    mask = present & (ub >= theta)
+    exact = np.zeros(cap, dtype=np.float64)
+    scored = add_exact(exact, mask)
+    if counters:
+        counters["blocks_scored"].add(scored)
+    cand = np.nonzero(mask)[0]
+    return cand, exact[cand], int(live.size)
+
+
 def _score_shard_kernel(term_params: dict[str, tuple[float, float, float]],
                         scheme: str, k: int,
                         salt_map: dict[int, tuple[int, int]],
@@ -415,117 +551,46 @@ def _score_shard_kernel(term_params: dict[str, tuple[float, float, float]],
                         counters: dict | None = None,
                         dead_bc=None):
     """Ranked kernel over one salt shard's posting rows (a pandas
-    frame of term, salt, blocks; see :meth:`IndexReader.scan`).
+    frame of term, salt, blocks; see :meth:`IndexReader.scan`):
+    decodes each term's blocks and calls :func:`score_shard`.
 
     ``salt_map`` maps each shard to its contiguous (first_doc_id,
     size) range; ids become dense positions as ``id - base``.
     Decoded ids and weight matrices are memoized per worker process
-    under ``cache_token`` (see _DECODED_CACHE), and a block's
-    statistics decode happens at most once per query even when both
-    the WAND seed pass and the final pass touch it.  ``counters``
-    may carry {'blocks_total', 'blocks_scored'} Spark accumulators —
-    blocks_scored counts blocks whose exact weights the final pass
-    actually needed, so (1 − scored/total) is the block-skip rate."""
+    under ``cache_token`` (see _DECODED_CACHE), so a block's
+    statistics decode happens at most once even when both the WAND
+    seed pass and the final pass touch it."""
     wcol = SCHEME_COL[scheme]
 
     def fn(pdf):
         import pandas as pd
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
         pdf = pdf.sort_values("term", kind="mergesort")
         salt = int(pdf["salt"].iloc[0])
-        base, cap = salt_map[salt]
-        cap += 2  # dense doc-position space
-        # pass 1: decode ids only (cached); per-doc upper bounds from
-        # block metadata (no statistics decode)
-        decoded = []  # (mult, idf, bidf, entries)
-        n_blocks = 0
-        ub = np.zeros(cap, dtype=np.float64)
-        present = np.zeros(cap, dtype=bool)  # any-posting docs score
-        # even when idf=0 (df=N hot terms), like the reference merge
+        base, span = salt_map[salt]
+        terms = []
         for term, blocks in zip(pdf["term"], pdf["blocks"]):
             mult, idf_v, bidf_v = term_params[term]
-            m = np.float64(mult)
-            bmaxes = _block_meta_ub(blocks, idf_v, bidf_v, wcol,
-                                    avgdl, k1, b)
-            entries = _decode_term_blocks(cache_token, salt, term,
-                                          blocks, base)
-            n_blocks += len(entries)
-            for bi, e in enumerate(entries):
-                ub[e[0]] += m * bmaxes[bi]
-                present[e[0]] = True
-            decoded.append((m, idf_v, bidf_v, entries))
-        if dead_bc is not None:
-            # tombstoned docs: cleared from `present` BEFORE WAND
-            # seeding, so a dead doc can neither seed θ (which could
-            # prune live top-k docs) nor become a candidate
-            dead = dead_bc.value.get(salt)
-            if dead is not None and dead.size:
-                present[dead - base] = False
-        if counters:
-            counters["blocks_total"].add(n_blocks)
-
-        def add_exact(into: np.ndarray, mask_pos=None, count=False):
-            # accumulate exact contributions in term-sorted block
-            # order — the oracle's float-op order
-            scored = 0
-            for m, idf_v, bidf_v, entries in decoded:
-                for e in entries:
-                    pos = e[0]
-                    if mask_pos is not None:
-                        sel = mask_pos[pos]
-                        if not sel.any():
-                            continue
-                    else:
-                        sel = None
-                    w = _block_weights(e, idf_v, bidf_v, avgdl,
-                                       k1, b)[:, wcol]
-                    scored += 1
-                    if sel is None:
-                        into[pos] += m * w
-                    else:
-                        np.add.at(into, pos[sel], m * w[sel])
-            if count and counters:
-                counters["blocks_scored"].add(scored)
-
-        exact = np.zeros(cap, dtype=np.float64)
-        if not use_pruning:
-            add_exact(exact, count=True)
-            cand = np.nonzero(present)[0]
-        else:
-            # θ = kth-best exact score among the top-k docs by upper
-            # bound — a lower bound on the true kth score, so every
-            # doc (and block) strictly below θ is provably out.
-            nz = np.nonzero(present)[0]
-            if nz.size == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            # any k seeds give a valid θ (kth exact among k docs is
-            # ≤ the true kth score); highest-ub seeds give the
-            # tightest — argpartition finds them in O(m)
-            if nz.size > k:
-                top_by_ub = nz[np.argpartition(-ub[nz], k - 1)[:k]]
-            else:
-                top_by_ub = nz
-            mask0 = np.zeros(cap, dtype=bool)
-            mask0[top_by_ub] = True
-            add_exact(exact, mask0)
-            seed_scores = exact[top_by_ub]
-            theta = (np.sort(seed_scores)[-k] if seed_scores.size >= k
-                     else -np.inf)
-            cand_mask = present & (ub >= theta)
-            exact = np.zeros(cap, dtype=np.float64)
-            add_exact(exact, cand_mask, count=True)
-            cand = np.nonzero(cand_mask)[0]
-
-        if cand.size == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        sel, top_scores = _topk_select(cand, exact[cand], k)
-        return pd.DataFrame({
-            "doc_id": (sel + base).astype(np.int64),
-            "score": top_scores,
-        })
+            terms.append((
+                mult,
+                _decode_term_blocks(cache_token, salt, term, blocks, base),
+                partial(_block_weights, idf_v=idf_v, bidf_v=bidf_v,
+                        avgdl=avgdl, k1=k1, b=b),
+                _block_meta_ub(blocks, idf_v, bidf_v, wcol, avgdl, k1, b)
+                if use_pruning else None))
+        pos, scores, _n = score_shard(
+            terms, span + 2, _dead_positions(dead_bc, salt, base), k,
+            wcol, use_pruning, counters)
+        pos, scores = _topk_select(pos, scores, k)
+        return pd.DataFrame({"doc_id": (pos + base).astype(np.int64),
+                             "score": scores})
 
     return fn
+
+
+def _dead_positions(dead_bc, salt: int, base: int) -> np.ndarray | None:
+    """A shard's tombstoned positions from the reader's broadcast."""
+    dead = dead_bc.value.get(salt) if dead_bc is not None else None
+    return dead - base if dead is not None else None
 
 
 def _score_shard_batch_kernel(query_mults: dict[int, dict[str, int]],
@@ -539,57 +604,36 @@ def _score_shard_batch_kernel(query_mults: dict[int, dict[str, int]],
     :meth:`IndexReader.scan`), scoring EVERY query of the batch in a
     single pass.
 
-    Each term's blocks decode once; each query then accumulates
-    mult x weight over its own terms in sorted-term order — the same
-    float-op order as the single-query kernel and the oracle, so
-    batch results are bit-identical to one-at-a-time results.  Used
-    by the evaluation harness (SURVEY.md §2.6): 64 queries cost one
+    Each term's blocks decode once; each query then calls
+    :func:`score_shard` (no pruning) over its own terms, so batch
+    results are bit-identical to one-at-a-time results.  Used by the
+    evaluation harness (SURVEY.md §2.6): 64 queries cost one
     distributed pass, not 64 driver round-trips."""
     wcol = SCHEME_COL[scheme]
     all_terms = sorted(term_params)
 
     def fn(pdf):
         import pandas as pd
-        cols = {"qid": [], "doc_id": [], "score": []}
-        if len(pdf) == 0:
-            return pd.DataFrame(cols)
         salt = int(pdf["salt"].iloc[0])
-        base, cap = salt_map[salt]
-        cap += 2
-        dead_pos = None
-        if dead_bc is not None:
-            dead = dead_bc.value.get(salt)
-            if dead is not None and dead.size:
-                dead_pos = dead - base
-        by_term: dict[str, list[tuple[np.ndarray, np.ndarray]]] = {}
+        base, span = salt_map[salt]
+        dead = _dead_positions(dead_bc, salt, base)
+        by_term = {}
         for term, blocks in zip(pdf["term"], pdf["blocks"]):
             _, idf_v, bidf_v = term_params[term]
-            entries = _decode_term_blocks(cache_token, salt, term,
-                                          blocks, base)
-            by_term[term] = [
-                (e[0], _block_weights(e, idf_v, bidf_v, avgdl,
-                                      k1, b)[:, wcol])
-                for e in entries]
+            by_term[term] = (
+                _decode_term_blocks(cache_token, salt, term, blocks, base),
+                partial(_block_weights, idf_v=idf_v, bidf_v=bidf_v,
+                        avgdl=avgdl, k1=k1, b=b))
+        cols = {"qid": [], "doc_id": [], "score": []}
         for qid in sorted(query_mults):
             mult = query_mults[qid]
-            exact = np.zeros(cap, dtype=np.float64)
-            present = np.zeros(cap, dtype=bool)
-            for term in sorted(mult):
-                m = np.float64(mult[term])
-                for pos, w in by_term.get(term, ()):
-                    exact[pos] += m * w
-                    present[pos] = True
-            if dead_pos is not None:
-                present[dead_pos] = False
-            cand = np.nonzero(present)[0]
-            if cand.size == 0:
-                continue
-            scores = exact[cand]
-            order = np.lexsort((cand, -scores))[:k]
-            sel = cand[order]
-            cols["qid"].extend([qid] * len(sel))
-            cols["doc_id"].extend((sel + base).tolist())
-            cols["score"].extend(scores[order].tolist())
+            terms = [(mult[t], *by_term[t], None)
+                     for t in sorted(mult) if t in by_term]
+            pos, scores = _topk_select(
+                *score_shard(terms, span + 2, dead, k, wcol)[:2], k)
+            cols["qid"].extend([qid] * len(pos))
+            cols["doc_id"].extend((pos + base).tolist())
+            cols["score"].extend(scores.tolist())
         return pd.DataFrame(cols)
 
     fn.terms = all_terms
@@ -608,6 +652,7 @@ def vector_topk_batch(spark: SparkSession,
     :func:`vector_topk` per query."""
     from pyspark.sql.window import Window
 
+    _check_k(k)
     reader = (index_dir if isinstance(index_dir, IndexReader)
               else IndexReader(spark, index_dir))
     mults = {qid: dict(Counter(vector_query_terms(
@@ -665,8 +710,8 @@ def vector_topk(spark: SparkSession, index_dir: str | IndexReader,
     (:func:`_pruning_pays`).  All three settings return identical
     rows (pruning is exact — pinned by test_wand_equals_full).
     ``counters``: optional {'blocks_total', 'blocks_scored'} Spark
-    accumulators for WAND-pruning evidence (see
-    _score_shard_kernel)."""
+    accumulators for WAND-pruning evidence (see :func:`score_shard`)."""
+    _check_k(k)
     reader = (index_dir if isinstance(index_dir, IndexReader)
               else IndexReader(spark, index_dir))
     terms = vector_query_terms(query, stopwords,

@@ -6,18 +6,23 @@ shard-kernel path (query_vector.py) is the right plan for batch
 retrieval and huge corpora, but every call is a Spark job with at
 least one Python task, ~300 ms on a 4-core VM (most of it the
 per-task worker set-up) — wrong for interactive serving.  This
-module closes that gap while keeping ONE index artifact: it reads
-the SAME bucket-partitioned postings + dictionary parquet directly
-with pyarrow (term → bucket via the pure-Python XXH64 twin of the
-build's Spark bucket expression), caches hot buckets, and scores with the
-same numpy block decode + ``scoring.posting_weights`` +
-sorted-term accumulation as the shard kernel — so results are
-rank-identical with scores equal to the last bit.
+module closes that gap while keeping ONE index artifact and ONE
+scoring core: :class:`LocalSearcher` opens the snapshot through the
+same :class:`~.query_vector.Snapshot` as the Spark reader, reads the
+SAME bucket-partitioned postings parquet directly with pyarrow (term
+→ bucket via the pure-Python XXH64 twin of the build's Spark bucket
+expression), caches hot buckets, and ranks each salt with the same
+:func:`~.query_vector.score_shard` as the Spark kernels — so results
+are rank-identical with scores equal to the last bit.
 
 Layout v4: blocks carry (tf, dl, max_tf); the decoded-postings LRU
 computes each term's (n,4) weight matrix ONCE at load (df from the
 dictionary, global stats from corpus_stats) — steady-state hot-term
-queries touch neither the codec nor the weight math.
+queries touch neither the codec nor the weight math.  Scoring runs
+one salt at a time with scratch allocated per call, sized by that
+salt's id span: ``compact_chunks(target_docs)`` bounds the span, so
+per-query memory stays O(chunk) on any index size, and nothing is
+shared between calls but the LRUs.
 
 Snapshot discipline: every read filters partitions to the chunk
 set of the registry snapshot corpus_stats references — chunks
@@ -36,7 +41,7 @@ a self-contained directory.
 
 from __future__ import annotations
 
-import os
+import operator
 from collections import Counter, OrderedDict
 
 import numpy as np
@@ -47,106 +52,41 @@ from ..functions.tokenizer import (
     STOPWORDS, bool_query_term, vector_query_terms,
 )
 from ..functions.xxhash import spark_term_bucket
-from .index_build import (
-    IndexPaths, check_layout, dict_version_of, snapshot_registry,
-    stemmed_of,
-)
 from .query_bool import _eval_ast_numpy, parse_boolean
-from .query_vector import SCHEME_COL, _topk_select
-
-#: Largest serving shard that keeps the dense per-process scratch
-#: (two n_docs-sized arrays, ~9 bytes/doc → ~256 MB at the cap).
-DENSE_MAX_DOCS = 1 << 25
+from .query_vector import (
+    SCHEME_COL, Snapshot, _check_k, _topk_select, score_shard,
+)
 
 SNIPPET_RADIUS = 8  # snippet window = 2*radius+1 tokens
 
+# a (positions, weights) block of LocalSearcher's decoded postings
+# already carries its weight matrix
+_WEIGHTS = operator.itemgetter(1)
 
-class LocalSearcher:
-    """In-process searcher over a built index directory."""
+
+class LocalSearcher(Snapshot):
+    """In-process searcher over a built index directory (one
+    snapshot, see :class:`~.query_vector.Snapshot`)."""
 
     def __init__(self, index_dir: str, max_cached_buckets: int = 64,
                  corpus_dir: str | None = None,
                  at_version: int | None = None):
-        stats_path = os.path.join(
-            index_dir, "corpus_stats" if at_version is None
-            else f"corpus_stats.v{at_version}")
-        if at_version is not None and not os.path.exists(stats_path):
-            from .index_build import list_snapshots
-            raise ValueError(
-                f"snapshot v{at_version} is expired or was never "
-                f"published at {index_dir}; retained versions: "
-                f"{list_snapshots(index_dir) or 'none'}")
-        stats = pq.read_table(stats_path).to_pylist()[0]
-        check_layout(stats)
-        self.stats = stats  # full corpus_stats row (httpserver /stat)
-        self._dict_version = dict_version_of(stats)
-        self.n_docs = stats["n_docs"]
-        self.n_buckets = stats["n_buckets"]
-        self.avgdl = stats["avgdl"]
-        self.vocabulary = stats["vocabulary"]
-        self.max_chunk = stats["max_chunk"]
-        self.k1 = stats["k1"]
-        self.b = stats["b"]
-        self._dir = index_dir
-        self.stemmed = bool(stemmed_of(stats))
-        # snapshot chunk set: membership, not a <= max_chunk
-        # watermark, isolates this searcher from streaming appends
-        # and from compaction-merged chunks awaiting pruning
-        registry_rows = snapshot_registry(IndexPaths(index_dir), stats)
-        self._chunk_set = sorted(r["chunk"] for r in registry_rows)
-        # id capacity: the highest assigned id + 1.  After a delete
-        # purge, live n_docs < max id (holes), so dense scratch and
-        # the url array size by chunk spans, never by n_docs.
-        self._id_cap = max(
-            (r["min_id"] + r.get("span", r["n_docs"])
-             for r in registry_rows), default=self.n_docs + 1)
-        # tombstones (logical deletes): masked out of every result.
-        # Only those inside this snapshot's chunk ranges, the rule
-        # IndexReader applies: a delete may name ids of an append not
-        # yet refreshed, which lie beyond this searcher's id capacity.
-        from .delete import dead_by_salt, read_tombstones
-        self._dead = np.concatenate([
-            np.zeros(0, dtype=np.int64),
-            *dead_by_salt(read_tombstones(index_dir),
-                          registry_rows).values()])
-        self._max_cached = max_cached_buckets
+        super().__init__(index_dir, at_version, max_cached_buckets)
         self._buckets: OrderedDict[int, dict] = OrderedDict()
-        self._dfs: OrderedDict[int, dict] = OrderedDict()
-        # decoded-postings cache: term -> (ids, weights[n,4]).  The
-        # reference keeps every posting list decoded in RAM for the
-        # life of the process (trie.go Refs); an LRU over hot terms
-        # is the bounded-memory equivalent — steady-state hot-term
-        # queries never touch the block codec.
+        # decoded-postings cache: term -> (ids, weights[n,4], per-salt
+        # blocks).  The reference keeps every posting list decoded in
+        # RAM for the life of the process (trie.go Refs); an LRU over
+        # hot terms is the bounded-memory equivalent — steady-state
+        # hot-term queries never touch the block codec.
         self._decoded: OrderedDict[str, tuple] = OrderedDict()
         self._max_decoded = 4096
         self._urls: np.ndarray | None = None
-        # dense score/present scratch, reused across queries (reset
-        # touches only the postings just scored — steady state is
-        # allocation-free).  Only materialized for serving shards up
-        # to DENSE_MAX_DOCS; beyond that vector_query falls back to
-        # the sort-based candidate accumulation so per-query memory
-        # stays O(postings touched) on arbitrarily large shards.
-        self._scores: np.ndarray | None = None
-        self._present: np.ndarray | None = None
         # optional raw-corpus parquet (url, text): enables snippets.
         # The index itself never stores text — snippet reads are
         # O(page) point lookups pushed down to the corpus scan.
         self._corpus_dir = corpus_dir
 
     # ---- storage ----------------------------------------------------
-
-    def _read_bucket(self, table_name: str, bucket: int,
-                     columns: list[str]):
-        if table_name == "dictionary" and self._dict_version is not None:
-            table_name = os.path.join(
-                "dictionary", f"v={self._dict_version}")
-        path = os.path.join(self._dir, table_name, f"bucket={bucket}")
-        if not os.path.isdir(path):
-            return None
-        return pq.read_table(
-            path, columns=columns,
-            filters=[("salt", "in", self._chunk_set)]
-            if table_name == "postings" else None)
 
     def _bucket_postings(self, bucket: int) -> dict:
         """term -> list[(salt, blocks)] for one bucket dir (LRU)."""
@@ -166,41 +106,26 @@ class LocalSearcher:
             self._buckets.popitem(last=False)
         return table
 
-    def _bucket_dfs(self, bucket: int) -> dict:
-        """term -> global df for one dictionary bucket (LRU)."""
-        hit = self._dfs.get(bucket)
-        if hit is not None:
-            self._dfs.move_to_end(bucket)
-            return hit
-        dfs: dict[str, int] = {}
-        t = self._read_bucket("dictionary", bucket, ["term", "df"])
-        if t is not None:
-            dfs = dict(zip(t.column("term").to_pylist(),
-                           t.column("df").to_pylist()))
-        self._dfs[bucket] = dfs
-        if len(self._dfs) > self._max_cached:
-            self._dfs.popitem(last=False)
-        return dfs
-
     def _postings(self, term: str) -> list:
         bucket = spark_term_bucket(term, self.n_buckets)
         return self._bucket_postings(bucket).get(term, [])
 
     def _decoded_postings(self, term: str) -> tuple:
-        """(doc_ids int64[n], weights float64[n,4]) across all
-        salts/blocks of *term*, decoded + weighted once and
-        LRU-cached."""
+        """(doc_ids int64[n], weights float64[n,4], {salt: block})
+        across all salts/blocks of *term*, decoded + weighted once
+        and LRU-cached.  A salt's block is the (shard positions,
+        weights) pair :func:`~.query_vector.score_shard` takes; its
+        weights are a view of the term's array."""
         hit = self._decoded.get(term)
         if hit is not None:
             self._decoded.move_to_end(term)
             return hit
-        bucket = spark_term_bucket(term, self.n_buckets)
-        df = self._bucket_dfs(bucket).get(term, 0)
-        ids_l, w_l = [], []
-        if df:
-            idf_v = float(scoring.idf(self.n_docs, df))
-            bidf_v = float(scoring.bm25_idf(self.n_docs, df))
-            for _salt, blocks in self._postings(term):
+        ids_l, w_l, by_salt, n = [], [], {}, 0
+        params = self.term_params({term: 1}).get(term)
+        if params is not None:
+            _m, idf_v, bidf_v = params
+            for salt, blocks in self._postings(term):
+                start = n
                 for blk in blocks:
                     ids, tfs, dls, mtfs = codec.unpack_block(
                         bytes(blk["data"]), int(blk["n"]))
@@ -208,10 +133,15 @@ class LocalSearcher:
                     w_l.append(scoring.posting_weights(
                         tfs, dls, mtfs, idf_v, bidf_v, self.avgdl,
                         self.k1, self.b))
+                    n += ids.size
+                by_salt[salt] = slice(start, n)
         if ids_l:
-            out = (np.concatenate(ids_l), np.vstack(w_l))
+            ids, w = np.concatenate(ids_l), np.vstack(w_l)
+            out = (ids, w, {
+                salt: (ids[sl] - self.salt_map[salt][0], w[sl])
+                for salt, sl in by_salt.items()})
         else:
-            out = (np.zeros(0, dtype=np.int64), np.zeros((0, 4)))
+            out = (np.zeros(0, dtype=np.int64), np.zeros((0, 4)), {})
         self._decoded[term] = out
         if len(self._decoded) > self._max_decoded:
             self._decoded.popitem(last=False)
@@ -219,11 +149,11 @@ class LocalSearcher:
 
     def _load_urls(self) -> np.ndarray:
         if self._urls is None:
-            docs_dir = os.path.join(self._dir, "docs")
             # chunk filter: ignore partitions beyond this snapshot
             # (streaming appends or a previous larger build)
-            t = pq.read_table(docs_dir, columns=["doc_id", "url"],
-                              filters=[("chunk", "in", self._chunk_set)])
+            t = pq.read_table(self.paths.docs, columns=["doc_id", "url"],
+                              filters=[("chunk", "in",
+                                        sorted(self.salt_map))])
             urls = np.empty(self._id_cap + 1, dtype=object)
             ids = t.column("doc_id").to_numpy()
             for i, u in zip(ids, t.column("url").to_pylist()):
@@ -238,82 +168,52 @@ class LocalSearcher:
                      stopwords: frozenset[str] = STOPWORDS,
                      with_total: bool = False):
         """Top-k [(doc_id, score[, url])] — rank-identical (scores
-        bit-equal) to the Spark path: same decode, same sorted-term
-        float accumulation order (a doc takes each term's
-        contribution exactly once, shards are disjoint).
-
-        Each doc takes its per-term contributions in sorted-term
-        order on BOTH accumulation paths, so scores are bit-equal:
-
-        * dense scratch (shards ≤ DENSE_MAX_DOCS): persistent
-          score/present arrays, fancy-index add per term (ids within
-          a term are unique), candidates via one present-mask scan;
-          the reset clears only the entries just touched, so steady
-          state allocates nothing and never sorts.  ~3x the qps of
-          the sort path at bench scale (np.unique over ~150k posting
-          ids per query was the round-2 serving regression).
-        * sort fallback (bigger shards): np.unique over touched ids
-          + np.bincount over the inverse — O(postings log postings)
-          time but O(postings touched) memory, the bound that
-          matters when one serving process faces a 10^9-doc shard.
-          (At 10^12 docs serving is bucket-range-sharded anyway;
-          DENSE_MAX_DOCS is per-process insurance, ~256 MB scratch.)
+        bit-equal) to the Spark path: each salt is scored by the same
+        :func:`~.query_vector.score_shard` call over the same decoded
+        weights (no pruning — weights are computed at load, so WAND
+        could skip only additions), and one top-k selection by
+        (score desc, doc_id asc) runs over every salt's candidates.
 
         With ``with_total`` returns ``(results, n_candidates)`` —
-        the total hit count (docs matching >= 1 term, the number the
-        reference reports as its result-list size) without
+        the total hit count (live docs matching >= 1 term, the number
+        the reference reports as its result-list size) without
         materializing more than k result rows.
         """
+        _check_k(k)
         wcol = SCHEME_COL[scheme]
         mult = Counter(vector_query_terms(query, stopwords,
                                           use_stem=self.stemmed))
-        ids_parts: list[np.ndarray] = []
-        contrib_parts: list[np.ndarray] = []
-        for term in sorted(mult):
-            m = np.float64(mult[term])
-            ids, w = self._decoded_postings(term)
-            if ids.size:
-                ids_parts.append(ids)
-                contrib_parts.append(m * w[:, wcol])
+        postings = [(mult[t], self._decoded_postings(t))
+                    for t in sorted(mult)]
+        ids_parts, score_parts, total = [], [], 0
+        for salt in sorted({s for _m, p in postings for s in p[2]}):
+            base, span = self.salt_map[salt]
+            terms = [(m, [by_salt[salt]], _WEIGHTS, None)
+                     for m, (_ids, _w, by_salt) in postings
+                     if salt in by_salt]
+            dead = self.dead_by_salt.get(salt)
+            pos, scores, n_live = score_shard(
+                terms, span + 2, None if dead is None else dead - base,
+                k, wcol)
+            ids_parts.append(pos + base)
+            score_parts.append(scores)
+            total += n_live
         if not ids_parts:
             return ([], 0) if with_total else []
-        if self._id_cap <= DENSE_MAX_DOCS:
-            if self._scores is None:
-                self._scores = np.zeros(self._id_cap + 2)
-                self._present = np.zeros(self._id_cap + 2, dtype=bool)
-            scores_d, present = self._scores, self._present
-            for ids, contrib in zip(ids_parts, contrib_parts):
-                scores_d[ids] += contrib
-                present[ids] = True
-            if self._dead.size:
-                present[self._dead] = False
-            cand = np.nonzero(present)[0]
-            scores = scores_d[cand].copy()
-            for ids in ids_parts:  # reset only what this query wrote
-                scores_d[ids] = 0.0
-                present[ids] = False
-        else:
-            ids_all = np.concatenate(ids_parts)
-            cand, inv = np.unique(ids_all, return_inverse=True)
-            scores = np.bincount(inv,
-                                 weights=np.concatenate(contrib_parts),
-                                 minlength=cand.size)
-            if self._dead.size:
-                keep = ~np.isin(cand, self._dead)
-                cand, scores = cand[keep], scores[keep]
-        sel, top_scores = _topk_select(cand, scores, k)
+        ids, scores = _topk_select(np.concatenate(ids_parts),
+                                   np.concatenate(score_parts), k)
         if with_urls:
             urls = self._load_urls()
             out = [(int(d), float(s), urls[d])
-                   for d, s in zip(sel, top_scores)]
+                   for d, s in zip(ids, scores)]
         else:
-            out = [(int(d), float(s)) for d, s in zip(sel, top_scores)]
-        return (out, int(cand.size)) if with_total else out
+            out = [(int(d), float(s)) for d, s in zip(ids, scores)]
+        return (out, total) if with_total else out
 
     # ---- boolean ----------------------------------------------------
 
     def _term_ids(self, word: str) -> np.ndarray:
-        ids, _w = self._decoded_postings(
+        ids, _w, _s = self._decoded_postings(
             bool_query_term(word, self.stemmed))
         return np.sort(ids)
 
@@ -327,8 +227,8 @@ class LocalSearcher:
             return np.zeros(0, dtype=np.int64)
         out = _eval_ast_numpy(ast, self._term_ids,
                               np.zeros(0, dtype=np.int64))
-        if self._dead.size and out.size:
-            out = out[~np.isin(out, self._dead)]
+        if self.tombstones.size and out.size:
+            out = out[~np.isin(out, self.tombstones)]
         return out
 
     def boolean_query(self, query: str) -> list[int]:
@@ -345,11 +245,7 @@ class LocalSearcher:
         Spark operator (operators/suggest.py) is the cluster-scale
         twin of these two methods."""
         if getattr(self, "_dict_all", None) is None:
-            name = ("dictionary" if self._dict_version is None
-                    else os.path.join("dictionary",
-                                      f"v={self._dict_version}"))
-            t = pq.read_table(os.path.join(self._dir, name),
-                              columns=["term", "df"])
+            t = pq.read_table(self._dict_dir, columns=["term", "df"])
             terms = np.array(t.column("term").to_pylist(), dtype=object)
             dfs = t.column("df").to_numpy()
             lens = np.array([len(x) for x in terms], dtype=np.int32)
@@ -461,8 +357,6 @@ def best_snippet(text: str, match_terms: set[str], stemmed: bool,
     leftmost — deterministic.  Returns the original character span
     (``text``), match offsets within it (``spans``), and clip
     flags."""
-    from collections import Counter
-
     from ..functions.porter2 import stem
     from ..functions.tokenizer import TOKEN_RE
 

@@ -11,8 +11,7 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ("region nation customer supplier part orders lineitem "
-          "events documents").split()
+TABLES = ("events", "documents")
 
 
 @pytest.fixture(scope="module")

@@ -8,6 +8,7 @@ results are bit-identical to direct LocalSearcher calls."""
 from __future__ import annotations
 
 import json
+import shutil
 import threading
 import urllib.error
 import urllib.request
@@ -15,7 +16,9 @@ import urllib.request
 import pytest
 
 from rechercheinfoweb_spark import plots
-from rechercheinfoweb_spark.httpserver import make_server
+from rechercheinfoweb_spark.httpserver import SearchApp, make_server
+from rechercheinfoweb_spark.operators.compact import compact_chunks
+from rechercheinfoweb_spark.operators.delete import delete_docs
 from rechercheinfoweb_spark.operators.serve_local import LocalSearcher
 
 QUERY = "search engine ranking"
@@ -94,6 +97,41 @@ def test_doc_fetch_and_corpus_alias(server, searcher):
         with pytest.raises(urllib.error.HTTPError) as e:
             _get(f"{server}{bad}")
         assert e.value.code == 404
+
+
+def test_negative_offset_serves_first_page(server):
+    """A negative offset serves the offset-0 page, like any other
+    out-of-range offset."""
+    base = (f"{server}/?search=search+engine+ranking&corpus=main"
+            "&type=vectorial&weight=bm25&format=json")
+    first = _get_json(f"{base}&offset=0")
+    assert len(first["results"]) == 20
+    for offset in (-5, -20):
+        a = _get_json(f"{base}&offset={offset}")
+        assert a["offset"] == 0 and a["size"] == first["size"]
+        assert a["results"] == first["results"], offset
+
+
+def test_doc_route_follows_snapshot(spark, index_dir, tmp_path):
+    """/doc/<corpus>/<id> answers exactly for the snapshot's live
+    docs: a tombstoned doc is gone at once, and after the purge the
+    ids above the live count still resolve."""
+    out = str(tmp_path / "idx")
+    shutil.copytree(index_dir, out)
+    before = LocalSearcher(out)
+    urls, n = before._load_urls(), before.n_docs
+    delete_docs(spark, out, doc_ids=[5, 10])
+    app = SearchApp({"web": LocalSearcher(out)})
+    assert app.doc_page("web", 5) is None
+    assert app.doc_page("web", 10) is None
+    assert app.doc_page("web", 6)["url"] == urls[6]
+    compact_chunks(spark, out)
+    app = SearchApp({"web": LocalSearcher(out)})
+    assert app.corpora["web"].n_docs == n - 2
+    for d in (n - 1, n):
+        assert app.doc_page("web", d)["url"] == urls[d]
+    assert app.doc_page("web", 5) is None
+    assert app.doc_page("web", n + 1) is None
 
 
 def test_stat_perf_precall_pages(server, searcher):

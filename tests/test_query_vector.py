@@ -13,6 +13,7 @@ from rechercheinfoweb_spark.operators.query_vector import (
     STOPWORDS, IndexReader, vector_query_terms, vector_topk,
     vector_topk_batch,
 )
+from rechercheinfoweb_spark.operators.serve_local import LocalSearcher
 
 QUERIES = [
     "search engine ranking",
@@ -179,3 +180,30 @@ def test_task_per_salt_equals_one_task(spark, spark_work, oracle_index,
     for q, got in boolean.items():
         assert got == [d for d in oracle_index.boolean_query(q)
                        if d not in dead], q
+    # LocalSearcher scores the same salts one at a time: equal to the
+    # Spark rows per query and scheme, and its hit count is the number
+    # of live docs the oracle scores
+    local = LocalSearcher(out)
+    for scheme in ("raw", "norm", "half", "bm25"):
+        for q in MULTI_VECTOR:
+            spark_rows = (vec[(q, False)] if scheme == "bm25" else
+                          [(x["doc_id"], x["score"]) for x in vector_topk(
+                              spark, r, q, scheme, k=10,
+                              use_pruning=False).collect()])
+            rows, total = local.vector_query(q, scheme, k=10,
+                                             with_total=True)
+            assert rows == spark_rows, (scheme, q)
+            assert total == sum(
+                d not in dead for d, _ in oracle_index.vector_query(
+                    q, scheme, k=10**6)), (scheme, q)
+
+
+def test_k_below_one_rejected_on_driver(spark, reader, index_dir):
+    local = LocalSearcher(index_dir)
+    for k in (0, -3):
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            vector_topk(spark, reader, "search engine", k=k)
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            vector_topk_batch(spark, reader, {1: "search engine"}, k=k)
+        with pytest.raises(ValueError, match="k must be >= 1"):
+            local.vector_query("search engine", k=k)

@@ -3,6 +3,10 @@ enough to be an interactive answer (the reference serves from RAM)."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
 import time
 
 from pyspark.sql import functions as F
@@ -187,3 +191,46 @@ def test_local_complete_matches_dictionary(reader, index_dir):
                    if t.startswith("se")),
                   key=lambda x: (-x[1], x[0]))[:4]
     assert local.complete("se", k=4) == want
+
+
+# ---- benchmark hook points ------------------------------------------
+
+_TRACED_QUERIES = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import spans
+from rechercheinfoweb_spark.operators.serve_local import LocalSearcher
+tr = spans.Tracer(keep_spans=False)
+spans.instrument_kernels(tr)
+spans.instrument_local_searcher(tr)
+s = LocalSearcher(sys.argv[2])
+s.vector_query("search engine ranking", "bm25", k=10)
+s.boolean_query_np("search AND engine")
+print(json.dumps(tr.snapshot()))
+"""
+
+
+def test_perfbench_hooks_record_local_searcher(index_dir):
+    """perfbench's traced run wraps LocalSearcher and serve_local by
+    name; a rename that would leave its counters at zero fails here.
+    Runs in a subprocess so the patches stay out of this session."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _TRACED_QUERIES,
+         os.path.join(repo, "perfbench"), index_dir],
+        cwd=repo, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr
+    snap = json.loads(proc.stdout.strip().splitlines()[-1])
+    counters = snap["counters"]
+    for name in ("serve_local.decoded_hits", "serve_local.decoded_misses",
+                 "serve_local.postings_touched",
+                 "serve_local.bucket_reads", "serve_local.vector_queries",
+                 "serve_local.boolean_queries"):
+        assert counters.get(name, 0) > 0, name
+    for span in ("serve_local.open", "serve_local.vector_query",
+                 "serve_local.boolean_query", "serve_local.read_bucket",
+                 "serve_local.decoded_postings",
+                 "tokenizer.vector_query_terms",
+                 "tokenizer.bool_query_term", "codec.unpack",
+                 "scoring.posting_weights"):
+        assert snap["totals"].get(span, [0])[0] > 0, span
