@@ -83,6 +83,15 @@ weight: {weights}
 </form>"""
 
 
+def _int_arg(args: dict, name: str, default: int) -> int:
+    """Query argument *name* as an int; missing or unparsable gives
+    *default* (a bad offset serves the first page)."""
+    try:
+        return int(args.get(name) or default)
+    except ValueError:
+        return default
+
+
 def _percentiles(values: list[float]) -> dict[str, float]:
     if not values:
         return {}
@@ -207,7 +216,7 @@ class SearchApp:
         if q and corpus in self.corpora and qtype in ("boolean",
                                                       "vectorial"):
             a = self.search(corpus, q, qtype, weight,
-                            int(args.get("offset", 0) or 0))
+                            _int_arg(args, "offset", 0))
             if a.get("did_you_mean"):
                 alt = a["did_you_mean"]
                 link = (f"/?search={quote_plus(alt)}&corpus={corpus}"
@@ -379,7 +388,7 @@ class _Handler(BaseHTTPRequestHandler):
                 a = app.search(corpus, q,
                                args.get("type", "vectorial"),
                                args.get("weight", "bm25"),
-                               int(args.get("offset", 0) or 0))
+                               _int_arg(args, "offset", 0))
                 self._send(json.dumps(a), "application/json")
             else:
                 self._send(app.index_page(args))
@@ -389,7 +398,7 @@ class _Handler(BaseHTTPRequestHandler):
             if not q or corpus not in app.corpora:
                 return self._404()
             s = app.corpora[corpus]
-            k = int(args.get("k", 5) or 5)
+            k = _int_arg(args, "k", 5)
             if "prefix" in args:
                 out = [{"term": t, "df": df}
                        for t, df in s.complete(q, k)]

@@ -3,8 +3,14 @@
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# the directory that holds the package (or the zip it was imported
+# from), put on the Python workers' path for the engine daemon
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Allocator environment for every JVM/python-worker child this
 # session spawns.  The engine's hot kernels are Arrow-batched, and
@@ -70,6 +76,20 @@ def _default_driver_memory(master: str) -> str:
     return f"{min(cap, max(8, 5 * n + 4))}g"
 
 
+def _with_daemon(master: str, extra_conf: dict | None) -> dict:
+    """*extra_conf* plus the engine daemon's conf where it applies
+    (see ``get_spark``)."""
+    conf = dict(extra_conf or {})
+    if (re.fullmatch(r"local(\[.*\])?", master)
+            and SparkContext._active_spark_context is None
+            and "spark.python.daemon.module" not in conf):
+        conf["spark.python.daemon.module"] = "rechercheinfoweb_spark.daemon"
+        path = conf.get("spark.executorEnv.PYTHONPATH")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            [_PACKAGE_ROOT] + ([path] if path else []))
+    return conf
+
+
 def get_spark(app_name: str = "rechercheinfoweb-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None,
@@ -80,6 +100,19 @@ def get_spark(app_name: str = "rechercheinfoweb-spark",
     (every custom kernel is a pandas UDF), and shuffle partitions
     default to 2× cores — the same settings we would ship in
     ``spark-submit --py-files`` conf on a real cluster.
+
+    A new ``local[...]`` session runs its Python workers under the
+    engine daemon, ``rechercheinfoweb_spark.daemon``, which stops
+    every task from re-reading ``pyspark.zip``.  ``get_spark`` sets
+    ``spark.python.daemon.module`` and prepends the package's parent
+    directory to ``spark.executorEnv.PYTHONPATH`` (merged with the
+    caller's value), so the daemon can import it.  Three cases keep
+    the stock daemon.  ``local-cluster`` and remote masters: their
+    daemons start before any task, and ``--py-files`` reach workers
+    only per task, so the module cannot be shown to be importable
+    there.  A session that already exists: its daemon was chosen
+    when it started.  And an explicit ``spark.python.daemon.module``
+    in ``extra_conf``, which always wins.
     """
     cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
     master = master or f"local[{cores}]"
@@ -105,6 +138,6 @@ def get_spark(app_name: str = "rechercheinfoweb-spark",
     )
     for k, v in WORKER_ALLOC_ENV.items():
         b = b.config(f"spark.executorEnv.{k}", v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_daemon(master, extra_conf).items():
         b = b.config(k, v)
     return b.getOrCreate()

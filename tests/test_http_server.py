@@ -112,6 +112,32 @@ def test_negative_offset_serves_first_page(server):
         assert a["results"] == first["results"], offset
 
 
+def test_unparsable_offset_serves_first_page(server):
+    """An offset that is not an integer serves the offset-0 page, in
+    JSON and in HTML, instead of a 500."""
+    base = (f"{server}/?search=search+engine+ranking&corpus=main"
+            "&type=vectorial&weight=bm25")
+
+    def page(offset):
+        a = _get_json(f"{base}&format=json&offset={offset}")
+        del a["time_ms"]
+        return a
+
+    first = page(0)
+    for offset in ("abc", "1.5"):
+        assert page(offset) == first
+        status, _ = _get(f"{base}&offset={offset}")
+        assert status == 200
+
+
+def test_suggest_unparsable_k_uses_default(server, searcher):
+    """/suggest with a non-integer k answers the default k=5."""
+    a = _get_json(f"{server}/suggest?corpus=main&q=serch&k=x")
+    assert a["suggestions"] == [
+        {"term": t, "dist": d, "df": df}
+        for t, d, df in searcher.suggest("serch", k=5)]
+
+
 def test_doc_route_follows_snapshot(spark, index_dir, tmp_path):
     """/doc/<corpus>/<id> answers exactly for the snapshot's live
     docs: a tombstoned doc is gone at once, and after the purge the
