@@ -20,10 +20,12 @@ proved at scale:
   delete (pinned by tests/test_delete.py).
 
 * **Physical purge** (operators/compact.py, ``purge_deletes``):
-  compaction re-packs the posting blocks of affected chunks without
-  the dead ids (df_part updated, emptied terms dropped), filters
-  their docs rows, and the follow-up finalize recomputes
-  n_docs/avgdl/df over the survivors.  Surviving doc ids are NEVER
+  compaction's one Spark job re-packs, in the affected chunks, only
+  the terms that lose a posting (df_part updated, emptied terms
+  dropped) and filters their docs rows; its driver-side delta
+  publish subtracts the dead docs from n_docs/sum_dl/n_raw_tokens
+  and the lost postings from df, so the republished statistics
+  equal a full finalize over the survivors.  Surviving doc ids are NEVER
   renumbered — each chunk keeps its original id *span* in the
   registry (the dense-position capacity) while ``n_docs`` becomes the
   live count — so the url↔doc_id contract and every downstream
@@ -44,7 +46,7 @@ import os
 
 import numpy as np
 
-from .index_build import IndexPaths
+from .index_build import IndexPaths, read_registry
 
 TOMBSTONES_FILE = "tombstones"
 
@@ -85,8 +87,10 @@ def write_tombstones(index_dir_or_paths, doc_ids) -> int:
 def delete_docs(spark, index_dir: str, doc_ids=(), urls=()) -> dict:
     """Tombstone documents by id and/or url.
 
-    Urls resolve through the index's own docs table (a narrow
-    two-column scan, predicate pushed to parquet).  Ids union into
+    Urls resolve through the docs of the working registry's chunks
+    (a narrow two-column scan, predicate pushed to parquet) — never
+    through chunk dirs kept for older snapshots or left by a crashed
+    compaction, which hold the same urls.  Ids union into
     the existing tombstone set; the file replace is atomic, so a
     concurrent reader sees either the old or the new complete set.
     Returns {"n_requested", "n_total"}."""
@@ -95,8 +99,10 @@ def delete_docs(spark, index_dir: str, doc_ids=(), urls=()) -> dict:
     paths = IndexPaths(index_dir)
     ids = [int(x) for x in doc_ids]
     urls = list(urls)
-    if urls:
-        rows = (spark.read.parquet(paths.docs)
+    chunks = [os.path.join(paths.docs, f"chunk={r['chunk']}")
+              for r in read_registry(paths.chunks)] if urls else []
+    if chunks:
+        rows = (spark.read.option("basePath", paths.docs).parquet(*chunks)
                 .where(F.col("url").isin(urls))
                 .select("doc_id").collect())
         ids.extend(int(r["doc_id"]) for r in rows)

@@ -560,10 +560,10 @@ def finalize_index(spark: SparkSession, out_dir: str, *,
     """Stage 2: global metadata over ALL chunks in the registry —
     the ``dictionary`` table (term → global df and first doc id,
     bucket-partitioned for the same pruning as postings) and
-    ``corpus_stats``.  The publish of the batch build and of
-    compaction, and the streaming refresh's fallback whenever its
-    delta (streaming/incremental.py) cannot prove its result equal
-    to this one: appended chunks change only these two small tables
+    ``corpus_stats``.  The publish of the batch build, and the
+    fallback of the streaming refresh and of compaction whenever
+    their delta (streaming/incremental.py) cannot prove its result
+    equal to this one: appended chunks change only these two small tables
     (idf/avgdl/df are applied at query time), so a refresh never
     touches posting bytes."""
     paths = IndexPaths(out_dir)
@@ -643,7 +643,7 @@ def publish_snapshot(paths: IndexPaths, version: int,
                      block_size: int, k1: float, b: float,
                      stemmed: bool) -> dict:
     """Commit snapshot *version* — the one publish tail of the full
-    finalize and the streaming delta refresh, whose dictionary
+    finalize and the delta of refresh and compaction, whose dictionary
     version dir must already be fully written.
 
     ``t_half`` / ``v_half`` are the raw tokens of docs with

@@ -341,18 +341,9 @@ class IndexReader(Snapshot):
         for bucket in self._buckets_of(terms):
             for salt, files in self._files.get(bucket, {}).items():
                 by_salt.setdefault(salt, []).extend(files)
-        cap = (self.spark._jsparkSession.sessionState().conf()
-               .filesMaxPartitionBytes())
-        tasks: list[list[tuple[int, list[str]]]] = []
-        size = 0
-        for salt in sorted(by_salt):
-            nbytes = sum(n for _p, n in by_salt[salt])
-            if not tasks or size + nbytes > cap:
-                tasks.append([])
-                size = 0
-            tasks[-1].append((salt, [p for p, _n in by_salt[salt]]))
-            size += nbytes
-        return tasks
+        return pack_tasks(self.spark, [
+            ((salt, [p for p, _n in by_salt[salt]]),
+             sum(n for _p, n in by_salt[salt])) for salt in sorted(by_salt)])
 
     def scan(self, terms: list[str], kernel,
              schema: pa.Schema) -> DataFrame:
@@ -384,6 +375,34 @@ class IndexReader(Snapshot):
         return d
 
 
+def pack_tasks(spark: SparkSession, units: list[tuple[object, int]]
+               ) -> list[list]:
+    """Pack (unit, source bytes) pairs in order into Spark tasks of at
+    most ``spark.sql.files.maxPartitionBytes`` bytes; a unit is never
+    split, so one larger than the cap is a task of its own."""
+    cap = (spark._jsparkSession.sessionState().conf()
+           .filesMaxPartitionBytes())
+    tasks: list[list] = []
+    size = 0
+    for unit, nbytes in units:
+        if not tasks or size + nbytes > cap:
+            tasks.append([])
+            size = 0
+        tasks[-1].append(unit)
+        size += nbytes
+    return tasks
+
+
+def _data_files(path: str) -> list[tuple[str, int]]:
+    """(path, bytes) of the data files in one table directory (none
+    when it does not exist)."""
+    if not os.path.isdir(path):
+        return []
+    with os.scandir(path) as it:
+        return [(f.path, f.stat().st_size) for f in it
+                if f.is_file() and not f.name.startswith(("_", "."))]
+
+
 def _list_postings(root: str, salts
                    ) -> dict[int, dict[int, list[tuple[str, int]]]]:
     """bucket -> salt -> [(path, bytes)] of the data files under
@@ -396,10 +415,7 @@ def _list_postings(root: str, salts
         for sdir in os.listdir(os.path.join(root, bdir)):
             if not (sdir.startswith("salt=") and int(sdir[5:]) in salts):
                 continue
-            with os.scandir(os.path.join(root, bdir, sdir)) as it:
-                files = [(f.path, f.stat().st_size) for f in it
-                         if f.is_file()
-                         and not f.name.startswith(("_", "."))]
+            files = _data_files(os.path.join(root, bdir, sdir))
             if files:
                 per_salt[int(sdir[5:])] = files
     return out

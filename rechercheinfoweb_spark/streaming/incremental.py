@@ -40,7 +40,8 @@ references and filter new salts out); :func:`refresh` publishes the
 next snapshot.  It is METADATA-ONLY — the dictionary (global df and
 first doc id per term) and corpus_stats — because scheme weights
 are computed at query time, and for the usual case, chunks appended
-on top of the live snapshot, it is a delta with no Spark job: the
+on top of the live snapshot, it is a delta with no Spark job
+(:func:`publish_delta`, which compaction publishes through too): the
 driver adds the new chunks' docs to corpus_stats (and the raw tokens
 of docs the Heaps half-point passes) and merges the new salts'
 (term, df_part, min_doc_id) rows into the previous dictionary
@@ -52,9 +53,10 @@ result equal:
 
 * the index was never finalized;
 * a live-snapshot chunk is missing from the working registry or
-  changed there (compaction, a delete purge, a crashed compaction's
-  registry), or an unpublished chunk's ids do not start above the
-  snapshot's;
+  changed there — other than the chunks the calling compaction
+  replaced, so for a refresh: a crashed compaction's registry — or
+  an unpublished chunk's ids do not start above the snapshot's, or
+  the working registry's doc count differs from the delta's;
 * the snapshot predates the dictionary's ``min_doc_id`` or
   corpus_stats' ``t_half`` column (once: the full finalize writes
   both).
@@ -147,6 +149,18 @@ def _write_part(dir_path: str, table) -> None:
     os.replace(tmp, os.path.join(dir_path, "part-00000.zstd.parquet"))
 
 
+def _clear_chunk(paths: IndexPaths, chunk: int) -> None:
+    """Remove ``docs/chunk=c`` and every ``postings/*/salt=c`` dir of
+    an unpublished chunk id before it is written."""
+    shutil.rmtree(os.path.join(paths.docs, f"chunk={chunk}"),
+                  ignore_errors=True)
+    if os.path.isdir(paths.postings):
+        for bdir in os.listdir(paths.postings):
+            shutil.rmtree(os.path.join(paths.postings, bdir,
+                                       f"salt={chunk}"),
+                          ignore_errors=True)
+
+
 def _file_schema(table_schema, *partition_cols: str):
     """Arrow schema of a table's data files: its Spark schema, not-null
     flags included, minus the partition (directory) columns."""
@@ -211,13 +225,7 @@ def _append_chunk_kernel(out_dir: str, chunk: int, first_id: int,
         tf = np.concatenate(tf)
 
         paths = IndexPaths(out_dir)
-        shutil.rmtree(os.path.join(paths.docs, f"chunk={chunk}"),
-                      ignore_errors=True)
-        if os.path.isdir(paths.postings):
-            for bdir in os.listdir(paths.postings):
-                shutil.rmtree(os.path.join(paths.postings, bdir,
-                                           f"salt={chunk}"),
-                              ignore_errors=True)
+        _clear_chunk(paths, chunk)
         _write_part(os.path.join(paths.docs, f"chunk={chunk}"),
                     pa.table({"doc_id": doc_ids, "url": tbl["url"],
                               "lang": tbl["lang"], "dl": dl,
@@ -355,24 +363,40 @@ def refresh(spark: SparkSession, out_dir: str, *,
     docstring); anything else runs the full ``finalize_index``.  A
     finalized index keeps its own n_buckets, block_size, k1 and b."""
     paths = IndexPaths(out_dir)
-    info = _delta_refresh(paths)
+    info = publish_delta(paths)
     if info is None:
         info = finalize_index(
             spark, out_dir, **_index_params(paths, n_buckets, block_size))
     return info
 
 
-def _delta_refresh(paths: IndexPaths) -> dict | None:
-    """Publish the live snapshot ⊕ the chunks appended since: their
-    docs' counts and token sums on top of corpus_stats, and their
-    (term, df_part, min_doc_id) rows merged into the previous
-    dictionary one bucket at a time — pyarrow on the driver, reading
-    no postings but the new salts'.  Returns None, having written
-    nothing, unless every live-snapshot chunk is still in the working
-    registry unchanged, every other chunk's ids start above the
-    snapshot's, and the snapshot has the ``t_half`` and
-    ``min_doc_id`` columns: the result then equals a full finalize's
-    (pinned by tests/test_streaming.py)."""
+def publish_delta(paths: IndexPaths, replaced: dict[int, int] | None = None,
+                  dead=None, lost=None) -> dict | None:
+    """Publish the live snapshot ⊕ the working registry's changes
+    since — pyarrow on the driver, no Spark job: the one delta
+    publisher of :func:`refresh` and of compaction.
+
+    Chunks appended on top of the snapshot add their docs' counts and
+    token sums to corpus_stats, and their (term, df_part, min_doc_id)
+    rows merge into the previous dictionary one bucket at a time; no
+    postings but the new salts' are read.  A compaction passes the
+    snapshot chunks it *replaced* (old chunk → merged chunk), the
+    purged docs *dead* (doc_id, dl, n_raw) and the postings *lost*
+    (bucket, salt, term, df removed, and the merged chunk's first
+    surviving doc of the term, null when none is left): the dead
+    docs leave corpus_stats, the lost df leaves the dictionary
+    (terms whose df reaches 0 drop), and a term whose first doc died
+    takes its merged chunk's first survivor — chunks are disjoint id
+    ranges, so that is the global one — or, with none left there, the
+    least ``min_doc_id`` of the bucket's later salts.
+
+    Returns None, having written nothing, unless every live-snapshot
+    chunk is still in the working registry unchanged (or replaced),
+    every other chunk's ids start above the snapshot's, the working
+    registry counts the docs the delta arrives at, and the snapshot
+    has the ``t_half`` and ``min_doc_id`` columns: the result then
+    equals a full finalize's (pinned by tests/test_streaming.py and
+    tests/test_compact.py)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
@@ -389,30 +413,46 @@ def _delta_refresh(paths: IndexPaths) -> dict | None:
     if not (os.path.exists(snap_path) and os.path.isdir(prev_dict)
             and "min_doc_id" in ds.dataset(prev_dict).schema.names):
         return None
+    replaced = replaced or {}
     snap, working = read_registry(snap_path), read_registry(paths.chunks)
 
     def key(r):
         return r["chunk"], r["min_id"], r["n_docs"], r["span"]
-    if (not {key(r) for r in snap} <= {key(r) for r in working}
+    kept = {key(r) for r in working}
+    if (any(r["chunk"] not in replaced and key(r) not in kept
+            for r in snap)
             or sum(r["n_docs"] for r in snap) != stats["n_docs"]):
         return None
-    old_chunks = {r["chunk"] for r in snap}
+    covered = {r["chunk"] for r in snap} | set(replaced.values())
     last_id = max((r["min_id"] + r["span"] - 1 for r in snap), default=0)
-    new = [r for r in working if r["chunk"] not in old_chunks]
+    new = [r for r in working if r["chunk"] not in covered]
     if any(r["min_id"] <= last_id for r in new):
         return None
+    dead_ids = (np.sort(dead["doc_id"].to_numpy()) if dead is not None
+                else np.zeros(0, dtype=np.int64))
+    n_docs = stats["n_docs"] - dead_ids.size + sum(r["n_docs"] for r in new)
+    if sum(r["n_docs"] for r in working) != n_docs:
+        return None
 
-    # docs: the new chunks' sums, and the raw tokens of docs the
-    # Heaps half-point passes (old_half < doc_id <= half), read only
-    # from the chunks whose id range overlaps that interval
-    n_docs = stats["n_docs"] + sum(r["n_docs"] for r in new)
+    # docs: the dead docs out, the new chunks' sums in, and the raw
+    # tokens of docs the Heaps half-point passes (between the old and
+    # the new half, either way), read only from the chunks whose id
+    # range overlaps that interval
     old_half, half = stats["n_docs"] // 2, n_docs // 2
+    lo, hi = sorted((old_half, half))
+    sign = 1 if half >= old_half else -1
     n_raw_tokens, sum_dl = stats["n_raw_tokens"], stats["sum_dl"]
     t_half = stats["t_half"]
+    if dead is not None:
+        n_raw = dead["n_raw"].to_numpy()
+        n_raw_tokens -= int(n_raw.sum())
+        sum_dl -= int(dead["dl"].to_numpy().sum())
+        t_half -= int(n_raw[dead["doc_id"].to_numpy() <= old_half].sum())
+    appended = {r["chunk"] for r in new}
     for r in working:
-        is_new = r["chunk"] not in old_chunks
-        if not is_new and (r["min_id"] + r["span"] - 1 <= old_half
-                           or r["min_id"] > half):
+        is_new = r["chunk"] in appended
+        if not is_new and (r["min_id"] + r["span"] - 1 <= lo
+                           or r["min_id"] > hi):
             continue
         docs = pq.read_table(
             os.path.join(paths.docs, f"chunk={r['chunk']}"),
@@ -424,11 +464,13 @@ def _delta_refresh(paths: IndexPaths) -> dict | None:
                     f"docs, the registry says {r['n_docs']}")
             n_raw_tokens += pc.sum(docs["n_raw"]).as_py() or 0
             sum_dl += pc.sum(docs["dl"]).as_py() or 0
-        passed = pc.and_(pc.greater(docs["doc_id"], old_half),
-                         pc.less_equal(docs["doc_id"], half))
-        t_half += pc.sum(docs["n_raw"].filter(passed)).as_py() or 0
+        passed = pc.and_(pc.greater(docs["doc_id"], lo),
+                         pc.less_equal(docs["doc_id"], hi))
+        t_half += sign * (pc.sum(docs["n_raw"].filter(passed)).as_py()
+                          or 0)
 
-    # dictionary: previous version ⊕ the new salts' rows, per bucket
+    # dictionary: previous version ⊖ the lost postings ⊕ the new
+    # salts' rows, per bucket
     schema = pa.schema([("term", pa.string()), ("df", pa.int64()),
                         ("min_doc_id", pa.int64())])
     dict_version = _next_dict_version(paths)
@@ -437,22 +479,30 @@ def _delta_refresh(paths: IndexPaths) -> dict | None:
         parts = []
         prev = os.path.join(prev_dict, f"bucket={bucket}")
         if os.path.isdir(prev):
-            parts.append(pq.read_table(prev, columns=schema.names))
+            parts.append(pq.read_table(prev, columns=schema.names)
+                         .cast(schema))
+            if lost is not None:
+                parts[0] = _drop_lost(
+                    paths, bucket, parts[0],
+                    lost.filter(pc.equal(lost["bucket"], bucket)),
+                    dead_ids, working)
         for r in new:
             salt = os.path.join(paths.postings, f"bucket={bucket}",
                                 f"salt={r['chunk']}")
             if os.path.isdir(salt):
                 parts.append(pq.read_table(
                     salt, columns=["term", "df_part", "min_doc_id"])
-                    .rename_columns(schema.names))
+                    .rename_columns(schema.names).cast(schema))
         if not parts:
             continue
-        agg = (pa.concat_tables([t.cast(schema) for t in parts])
+        agg = (pa.concat_tables(parts)
                .group_by("term")
                .aggregate([("df", "sum"), ("min_doc_id", "min")]))
         merged = pa.table([agg["term"], agg["df_sum"],
                            agg["min_doc_id_min"]],
                           schema=schema).sort_by("term")
+        if not merged.num_rows:
+            continue
         vocab += merged.num_rows
         v_half += int((merged["min_doc_id"].to_numpy() <= half).sum())
         _write_part(os.path.join(paths.dictionary_version(dict_version),
@@ -464,6 +514,62 @@ def _delta_refresh(paths: IndexPaths) -> dict | None:
         vocab=vocab, v_half=v_half, n_buckets=stats["n_buckets"],
         block_size=stats["block_size"], k1=stats["k1"], b=stats["b"],
         stemmed=bool(stemmed_of(stats)))
+
+
+def _drop_lost(paths: IndexPaths, bucket: int, prev, lost,
+               dead_ids: np.ndarray, working: list[dict]):
+    """Dictionary bucket *prev* (term, df, min_doc_id) minus a purge's
+    *lost* postings of that bucket (see :func:`publish_delta`)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if not lost.num_rows:
+        return prev
+    removed = lost.group_by("term").aggregate([("df", "sum")])
+    at = pc.index_in(removed["term"], value_set=prev["term"])
+    if at.null_count:
+        raise ValueError(f"dictionary bucket {bucket} lacks a term a "
+                         "purge removed postings of")
+    df = prev["df"].to_numpy().copy()
+    df[at.to_numpy()] -= removed["df_sum"].to_numpy()
+    first = prev["min_doc_id"].to_numpy().copy()
+    died = np.flatnonzero((df > 0) & np.isin(first, dead_ids))
+    if died.size:
+        terms = prev["term"].take(died).to_pylist()
+        survivor = dict(zip(zip(lost["term"].to_pylist(),
+                                lost["salt"].to_pylist()),
+                            lost["min_doc_id"].to_pylist()))
+        rows = sorted(working, key=lambda r: r["min_id"])
+        owner = [rows[i]["chunk"] for i in np.searchsorted(
+            [r["min_id"] for r in rows], first[died], side="right") - 1]
+        unresolved = {}
+        for i, t, c in zip(died, terms, owner):
+            if survivor.get((t, c)) is None:
+                unresolved[t] = i
+            else:
+                first[i] = survivor[(t, c)]
+        if unresolved:
+            # no survivor in the first doc's chunk: read the term's
+            # first doc of every later salt of the bucket
+            lo = first[list(unresolved.values())].min()
+            later = [os.path.join(paths.postings, f"bucket={bucket}",
+                                  f"salt={r['chunk']}") for r in working
+                     if r["min_id"] + r["span"] > lo]
+            found = pa.concat_tables([
+                pq.read_table(s, columns=["term", "min_doc_id"],
+                              filters=[("term", "in", list(unresolved))])
+                .cast(pa.schema([("term", pa.string()),
+                                 ("min_doc_id", pa.int64())]))
+                for s in later if os.path.isdir(s)]).group_by("term") \
+                .aggregate([("min_doc_id", "min")])
+            got = dict(zip(found["term"].to_pylist(),
+                           found["min_doc_id_min"].to_pylist()))
+            for t, i in unresolved.items():
+                first[i] = got[t]
+    keep = df > 0
+    return pa.table([prev["term"], df, first], schema=prev.schema) \
+        .filter(keep)
 
 
 def index_web_pages_stream(spark: SparkSession, stream_df: DataFrame,

@@ -244,3 +244,17 @@ def test_local_searcher_skips_tombstones_beyond_its_snapshot(
     same_as_spark()  # snapshot without the append
     inc.refresh(spark, out, n_buckets=8)
     same_as_spark()  # the append is live, its docs masked
+
+
+def test_delete_by_url_reads_only_working_chunks(spark, tmp_path_factory):
+    """After a compaction the pre-compaction chunk dirs stay on disk
+    for older readers, holding the same urls: a url resolves through
+    the working registry's chunks only, so it names one doc."""
+    out = str(tmp_path_factory.mktemp("del_url"))
+    build_index(spark, synthetic_web_pages(spark, 60), out, n_chunks=3,
+                n_buckets=8)
+    url = IndexReader(spark, out).docs().first()["url"]
+    info = compact_chunks(spark, out, target_docs=1000)
+    assert info["merged_groups"] == 1 and info["pruned_chunks"] == []
+    assert dl.delete_docs(spark, out, urls=[url]) == {
+        "n_requested": 1, "n_total": 1}

@@ -484,7 +484,7 @@ def test_refresh_falls_back_to_full_finalize(spark, spark_work,
     def crash(*args, **kwargs):
         raise RuntimeError("injected failure: before compaction publish")
 
-    monkeypatch.setattr(compact, "finalize_index", crash)
+    monkeypatch.setattr(compact, "publish_delta", crash)
     with pytest.raises(RuntimeError, match="injected"):
         compact.compact_chunks(spark, out, target_docs=80)
     monkeypatch.undo()
