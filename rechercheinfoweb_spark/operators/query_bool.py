@@ -31,11 +31,13 @@ evaluates independently inside each ``salt`` shard over numpy id
 arrays.  This is correct because shards are disjoint doc-id ranges and
 every reference set operation distributes over disjoint ranges —
 including the bound NOT, whose ``prec`` operand is itself
-shard-local.  The result is ``orderBy("doc_id")``; with one task that
-sort needs no exchange, so a query is one Spark job with one Python
-task.  Postings are already co-partitioned by salt, so AND/OR/NOT
-never move id lists; join-based set algebra would pay a shuffle per
-operator.
+shard-local.  Tasks hold their salts in doc-id order
+(:meth:`IndexReader.scan_tasks`), so sorting ids within each task
+(``sortWithinPartitions``) orders the whole result with no exchange
+and no range-partition sample job: a query is one Spark job with one
+Python task per task of the scan.  Postings are already
+co-partitioned by salt, so AND/OR/NOT never move id lists;
+join-based set algebra would pay a shuffle per operator.
 """
 
 from __future__ import annotations
@@ -225,7 +227,6 @@ def boolean_search(spark: SparkSession, index_dir: str | IndexReader,
                           _eval_shard_kernel(ast, reader.stemmed,
                                              reader._dead_bc),
                           pa.schema([("doc_id", pa.int64())]))
-    res = res.orderBy("doc_id")
     if with_urls:
         # NO broadcast hint on the result side: a boolean result is
         # unbounded (an OR over hot terms can match most of a web
@@ -233,11 +234,13 @@ def boolean_search(spark: SparkSession, index_dir: str | IndexReader,
         # the ranked path may hint because its result is k rows.
         # Both sides are id-partitioned, so AQE picks a sort-merge /
         # shuffled-hash join whose cost tracks the result size;
-        # interactive callers paginate first (SearchService.search)
-        # and join urls for one page only.
+        # interactive callers page the ids first and join urls for
+        # one page only.
         docs = reader.docs().select("doc_id", "url")
-        res = docs.join(res, "doc_id").orderBy("doc_id")
-    return res
+        return docs.join(res, "doc_id").orderBy("doc_id")
+    # tasks cover ascending, disjoint id ranges: in-task order is
+    # the global order
+    return res.sortWithinPartitions("doc_id")
 
 
 def _collect_words(node, acc: list):

@@ -32,15 +32,16 @@ one task and a large one fans out per salt.  The global answer is
 ``orderBy(score desc, doc_id asc).limit(k)`` (Catalyst
 TakeOrderedAndProject), one row set of k per task.
 
-Why one task: each Python task costs ~215 ms of worker CPU before any
-kernel runs.  PySpark's per-task ``setup_spark_files`` calls
-``importlib.invalidate_caches()``, and under CPython 3.11 that
-re-reads ``pyspark.zip`` (1,328 entries) once for each cached
-zipimporter, plus the spark-core jar (measured on a 4-core VM).  A
-whole JVM-only job costs ~60-80 ms there.  So the task source stays
-JVM-only (a ``createDataFrame`` of Python rows would add a second
-Python round trip per task), df lookups stay on the driver, and salts
-share a task until their bytes fill one.
+Why one task: a Python task is the costliest step of a query's
+plan.  On a 4-core VM (``local[4]``, a session from
+``session.get_spark``: the engine daemon and Unix domain sockets), a
+one-stage JVM-only job has a p50 of ~22-25 ms and the same job with
+one pass-through ``mapInArrow`` task ~35-38 ms; over TCP loopback
+that task cost ~74-79 ms, most of it the kernel's ~41 ms wait for
+its first input batch.  So the task source stays JVM-only (a
+``createDataFrame`` of Python rows would add a second Python round
+trip per task), df lookups stay on the driver, and salts share a
+task until their bytes fill one.
 
 Layout v4: blocks store (delta ids, tf, dl, max_tf) varints; the
 kernel computes the scheme weight from those statistics plus
@@ -333,17 +334,19 @@ class IndexReader(Snapshot):
         tasks: each task is a list of (salt, files).
 
         Only the terms' buckets of this snapshot's salts are read.
-        Salts are packed in order into tasks of at most
+        Salts are packed in doc-id order (a compaction's fresh salt
+        numbers do not follow it) into tasks of at most
         ``spark.sql.files.maxPartitionBytes`` postings bytes (a salt
-        is never split), so a small index is one task and a large
-        one fans out per salt."""
+        is never split), so a small index is one task, a large one
+        fans out per salt, and the tasks cover ascending id ranges."""
         by_salt: dict[int, list[tuple[str, int]]] = {}
         for bucket in self._buckets_of(terms):
             for salt, files in self._files.get(bucket, {}).items():
                 by_salt.setdefault(salt, []).extend(files)
         return pack_tasks(self.spark, [
             ((salt, [p for p, _n in by_salt[salt]]),
-             sum(n for _p, n in by_salt[salt])) for salt in sorted(by_salt)])
+             sum(n for _p, n in by_salt[salt]))
+            for salt in sorted(by_salt, key=lambda s: self.salt_map[s][0])])
 
     def scan(self, terms: list[str], kernel,
              schema: pa.Schema) -> DataFrame:

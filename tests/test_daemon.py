@@ -4,14 +4,19 @@ The guard tests run in-process with no Spark: an unchanged zip on
 ``sys.path`` is not re-read by ``importlib.invalidate_caches()``, a
 replaced zip is, and a new file in a plain directory still becomes
 importable.  The session tests check that the suite's ``local[4]``
-session runs its Python tasks under the daemon, and which sessions
-``get_spark`` gives it."""
+session runs its Python tasks under the daemon over a Unix domain
+socket in a private directory, and which sessions ``get_spark`` gives
+them."""
 
 from __future__ import annotations
 
 import importlib
 import os
+import shutil
+import stat
+import subprocess
 import sys
+import tempfile
 import zipfile
 import zipimport
 
@@ -123,8 +128,33 @@ def test_session_tasks_run_under_the_daemon(spark):
         session._PACKAGE_ROOT, "rechercheinfoweb_spark", "daemon.py"))
 
 
+def test_session_tasks_talk_over_the_private_socket_dir(spark):
+    def kernel(batches):
+        import os
+
+        for _ in batches:
+            yield pa.RecordBatch.from_pydict({
+                "uds": [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")],
+                "dir": [os.environ.get("PYTHON_WORKER_FACTORY_SOCK_DIR")]})
+
+    rows = spark.range(1, numPartitions=1).mapInArrow(
+        kernel, "uds string, dir string").collect()
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    sock_dir = conf.get("spark.python.unix.domain.socket.dir")
+    # the JVM writes "True"; PySpark compares it lower-cased
+    assert [(r["uds"].lower(), r["dir"]) for r in rows] == \
+        [("true", sock_dir)]
+    st = os.stat(sock_dir)
+    assert stat.S_IMODE(st.st_mode) == 0o700
+    assert st.st_uid == os.getuid()
+
+
 def test_which_sessions_get_the_daemon(spark, monkeypatch):
     key, path = "spark.python.daemon.module", "spark.executorEnv.PYTHONPATH"
+    uds, uds_dir = ("spark.python.unix.domain.socket.enabled",
+                    "spark.python.unix.domain.socket.dir")
+    monkeypatch.setattr(session, "_socket_dir", lambda: "/sock")
     # a session already exists: its daemon is already chosen
     assert session._with_daemon("local[2]", None) == {}
     monkeypatch.setattr(SparkContext, "_active_spark_context", None)
@@ -132,9 +162,113 @@ def test_which_sessions_get_the_daemon(spark, monkeypatch):
         conf = session._with_daemon(master, {path: "/extra.zip"})
         assert conf == {key: "rechercheinfoweb_spark.daemon",
                         path: os.pathsep.join([session._PACKAGE_ROOT,
-                                               "/extra.zip"])}
+                                               "/extra.zip"]),
+                        uds: "true", uds_dir: "/sock"}
     for master in ("local-cluster[2,1,1024]", "spark://host:7077", "yarn"):
         assert session._with_daemon(master, {path: "/x.zip"}) == \
             {path: "/x.zip"}
+    # an explicit daemon (perfbench's traced one) still gets the socket
     explicit = {key: "worker_daemon"}
-    assert session._with_daemon("local[2]", explicit) == explicit
+    assert session._with_daemon("local[2]", explicit) == \
+        {**explicit, uds: "true", uds_dir: "/sock"}
+    # an explicit transport wins, and so does an explicit socket dir
+    assert session._with_daemon("local[2]", {uds: "false"})[uds] == "false"
+    assert uds_dir not in session._with_daemon("local[2]", {uds: "false"})
+    assert session._with_daemon("local[2]", {uds_dir: "/mine"})[uds_dir] \
+        == "/mine"
+
+
+@pytest.fixture
+def short_tmp():
+    """An empty directory with a path short enough for a socket dir
+    (pytest's ``tmp_path`` can be too long for Spark's limit)."""
+    d = tempfile.mkdtemp(prefix="riw-t-", dir="/tmp")
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _socket_dir_in(tmp_dir, monkeypatch) -> str:
+    """``session._socket_dir()`` with ``TMPDIR`` set to *tmp_dir*."""
+    monkeypatch.setenv("TMPDIR", tmp_dir)
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    return session._socket_dir()
+
+
+def test_socket_dir_is_private(short_tmp, monkeypatch):
+    d = _socket_dir_in(short_tmp, monkeypatch)
+    assert os.path.dirname(d) == short_tmp
+    st = os.stat(d)
+    assert stat.S_ISDIR(st.st_mode) and stat.S_IMODE(st.st_mode) == 0o700
+    assert st.st_uid == os.getuid()
+    os.rmdir(d)
+
+
+@pytest.mark.parametrize("tmpdir_len,fits", [(44, True), (45, False),
+                                              (100, False)])
+def test_long_tmpdir_falls_back_to_tmp(short_tmp, monkeypatch,
+                                       tmpdir_len, fits):
+    """Spark takes a socket dir of at most 61 characters; under a
+    longer ``TMPDIR`` (a "riw-uds-XXXXXXXX" dir adds 17) the dir goes
+    under ``/tmp``, and its socket paths fit ``sun_path``."""
+    base = os.path.join(short_tmp, "t" * (tmpdir_len - len(short_tmp) - 1))
+    os.mkdir(base)
+    assert len(base) == tmpdir_len
+    d = _socket_dir_in(base, monkeypatch)
+    try:
+        assert os.path.dirname(d) == (base if fits else "/tmp")
+        assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
+        assert len(d) <= session._SOCKET_DIR_MAX == 61
+        sock = os.path.join(d, ".00000000-0000-0000-0000-000000000000.sock")
+        assert len(sock) < 108  # AF_UNIX sun_path, NUL included
+    finally:
+        os.rmdir(d)
+    if not fits:
+        assert os.listdir(base) == []  # the too-long try is gone
+
+
+def test_socket_dir_is_removed_at_exit(short_tmp):
+    env = {**os.environ, "TMPDIR": short_tmp,
+           "PYTHONPATH": session._PACKAGE_ROOT}
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import os\n"
+         "from rechercheinfoweb_spark import session\n"
+         "d = session._socket_dir()\n"
+         "open(os.path.join(d, '.x.sock'), 'w').close()\n"
+         "print(d)\n"],
+        env=env, capture_output=True, text=True, check=True)
+    d = out.stdout.strip()
+    assert os.path.dirname(d) == short_tmp
+    assert not os.path.exists(d)
+
+
+def test_session_under_long_tmpdir_runs_python_tasks(short_tmp):
+    """A new session under a ``TMPDIR`` too long for Spark's socket
+    dir (perfbench puts ``TMPDIR`` inside its checkout) still runs
+    Python tasks over the socket, and its socket dir is gone after
+    the process exits.  At 46 characters a socket dir under it (63)
+    would still fit ``sun_path`` but not Spark's 61."""
+    base = os.path.join(short_tmp, "t" * (46 - len(short_tmp) - 1))
+    os.mkdir(base)
+    code = (
+        "import os\n"
+        "from rechercheinfoweb_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "conf = spark.sparkContext.getConf()\n"
+        "def k(it):\n"
+        "    yield from it\n"
+        "n = len(spark.range(3, numPartitions=1)"
+        ".mapInArrow(k, 'id long').collect())\n"
+        "d = conf.get('spark.python.unix.domain.socket.dir')\n"
+        "socks = [f for f in os.listdir(d) if f.endswith('.sock')]\n"
+        "print(conf.get('spark.python.unix.domain.socket.enabled'), n,\n"
+        "      d, len(socks) > 0)\n")
+    env = {**os.environ, "TMPDIR": base, "SPARK_DRIVER_MEMORY": "1g",
+           "PYTHONPATH": session._PACKAGE_ROOT}
+    out = subprocess.run([sys.executable, "-c", code], env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    uds, n, d, had_socket = out.stdout.split()[-4:]
+    assert (uds, n, had_socket) == ("true", "3", "True")
+    assert os.path.dirname(d) == "/tmp"
+    assert not os.path.exists(d)

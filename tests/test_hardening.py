@@ -35,10 +35,12 @@ def test_machine_ram_reads_proc_meminfo():
     assert got == exp
 
 
-def test_ann_cache_key_tracks_content(tmp_path):
+def test_ann_cache_key_tracks_content(tmp_path, monkeypatch):
     """The contract's index cache key is a CONTENT fingerprint:
     rewriting the documents parquet (same path) must change the key,
-    so a regenerated table never probes a stale index."""
+    so a regenerated table never probes a stale index — and so must
+    a change to one engine source file, so a cached index is never
+    one that older engine code built or compacted."""
     import __spark_entry__ as entry
 
     p = tmp_path / "documents.parquet"
@@ -48,7 +50,22 @@ def test_ann_cache_key_tracks_content(tmp_path):
     k2 = entry._content_key(str(p))
     assert k1 != k2  # same bytes, new mtime -> regenerated file
     p.write_bytes(b"v2-bytes-longer")
-    assert entry._content_key(str(p)) not in (k1, k2)
+    k3 = entry._content_key(str(p))
+    assert k3 not in (k1, k2)
+
+    engine = tmp_path / "engine"
+    (engine / "operators").mkdir(parents=True)
+    src = engine / "operators" / "compact.py"
+    src.write_text("PURGE = 1\n")
+    (engine / "notes.txt").write_text("not code")
+    monkeypatch.setattr(entry, "_ENGINE_DIR", str(engine))
+    k4 = entry._content_key(str(p))
+    assert k4 != k3
+    assert entry._content_key(str(p)) == k4  # stable for the same code
+    (engine / "notes.txt").write_text("still not code")
+    assert entry._content_key(str(p)) == k4
+    src.write_text("PURGE = 2\n")
+    assert entry._content_key(str(p)) not in (k3, k4)
 
 
 def test_check_layout_rejects_incompatible_index():

@@ -1,11 +1,10 @@
-"""Multimodal plumbing + serving facade tests."""
+"""Multimodal plumbing tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from rechercheinfoweb_spark.operators import multimodal as mm
-from rechercheinfoweb_spark.search import SearchService
 
 
 def test_media_metadata_prunes_payload(spark, tmp_path_factory):
@@ -46,27 +45,3 @@ def test_sample_frames_shapes(spark):
     for mid, dur in durs.items():
         assert per[mid] == (dur or 0) // 5000 + 1
 
-
-def test_search_service(spark, index_dir, oracle_index):
-    svc = SearchService(spark, index_dir)
-    p0 = svc.search("search engine ranking", "vectorial", "bm25",
-                    page=0, page_size=5)
-    p1 = svc.search("search engine ranking", "vectorial", "bm25",
-                    page=1, page_size=5)
-    want = oracle_index.vector_query("search engine ranking", "bm25",
-                                     k=10)
-    got = [(r.doc_id, r.score) for r in p0 + p1]
-    assert [(d, s) for d, s in want] == got
-    assert all(r.url == oracle_index.doc_url[r.doc_id] for r in p0)
-
-    b0 = svc.search("search AND engine", "boolean", page=0,
-                    page_size=7)
-    ids = oracle_index.boolean_query("search AND engine")
-    assert [r.doc_id for r in b0] == ids[:7]
-
-    d = svc.doc(p0[0].doc_id)
-    assert d is not None and d["url"] == p0[0].url
-    st = svc.stats()
-    assert st["n_docs"] == oracle_index.n_docs
-    assert st["vocabulary"] == len(oracle_index.postings)
-    svc.close()
